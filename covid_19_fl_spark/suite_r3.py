@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults
+from . import tables
 from .llmops import dedup, similarity, text
 from .operators import bloom, ranks
 from .suite import ORACLES as _ORACLES
@@ -1422,27 +1422,9 @@ def st_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, mergeable, and at 100 TB the same plan runs unmodified
     against a Kafka source with a watermark bounding the state store.
     """
-    import os as _os
     import uuid as _uuid
 
-    path = _os.path.join(sf_dir, "events.parquet")
-    # The file stream source requires a DIRECTORY; stage via the
-    # shared helper (symlink dir for single-file corpora, the table's
-    # own part-file directory for Spark-written ones). Late import:
-    # suite_r4 loads after this module but before any query runs.
-    from .suite_r4 import _stage_stream_dir
-
-    stage = _stage_stream_dir(sf_dir, "events")
-    # Same physical-type normalization as tables.load (nanos long vs
-    # micros timestamp_ntz), applied to the STREAM.
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(path).schema
-    src = spark.readStream.schema(schema).parquet(stage)
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
+    src = tables.stream(spark, sf_dir, "events")
     agg = (
         src.groupBy(F.window("ts", "1 day").alias("w"))
         .agg(

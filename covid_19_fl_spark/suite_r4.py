@@ -24,7 +24,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults, scoped_conf
+from . import tables
+from .confs import scoped_conf
 from .llmops import similarity
 from .streaming import stateful
 from .suite import _t, query
@@ -53,24 +54,10 @@ def _stream_shuffle_partitions(spark: SparkSession, n: int = 16):
     start; restoring afterwards leaves batch plans untouched. A real
     cluster sizes this to state volume ÷ target per-store size —
     the pin is drain-harness tuning, not operator semantics.
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides the default (round 10):
-    the right width is state volume ÷ target per-store size, so scale
-    sweeps raise it (e.g. 64+ at the 100× corpus) without code edits —
-    measured at sf0.1: 8 and 16 equal, 32 is 1.4× slower (per-store
+    Measured at sf0.1: 8 and 16 equal, 32 is 1.4× slower (per-store
     fixed cost dominates tiny stores)."""
-    n = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", str(n)))
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)}):
         yield
-
-
-# Estimated decoded-state blowup over parquet bytes (dictionary/RLE
-# decode + JVM object headers + store key/value copies), and the heap
-# budget a corpus-sized on-heap join state may claim. 256 MB of source
-# parquet ≈ 2.5 GB decoded state ≈ 1/6 of the default 16 g driver heap
-# — comfortably on-heap below, RocksDB above. Shared with the
-# iterative-graph cache pins (tables.data_pin_level).
-from .tables import BIG_CORPUS_BYTES as _STATE_ONHEAP_MAX_SRC_BYTES
-from .tables import corpus_bytes as _corpus_bytes
 
 
 @contextmanager
@@ -82,8 +69,8 @@ def _stream_state_store(spark: SparkSession, sf_dir: str):
     (a whole-corpus availableNow stream-stream join holds O(both
     sides) in state until the batch commits):
 
-    * small corpus (< {_STATE_ONHEAP_MAX_SRC_BYTES} source bytes —
-      every local SF, the 10× replica): the default on-heap
+    * small corpus (< 256 MB of source parquet — every local SF, the
+      10× replica): the default on-heap
       HDFSBackedStateStoreProvider. Measured 2.1× faster than RocksDB
       across the five drain-path queries at sf0.1 (20.8 s vs 44.3 s
       suite slice): RocksDB pays JNI serialization, memtable flushes,
@@ -96,11 +83,12 @@ def _stream_state_store(spark: SparkSession, sf_dir: str):
       down. Executor-local disk with a bounded block cache is the
       posture every production deployment runs at data-sized state.
 
-    The threshold is a first-principles heap-fit bound (≈10× decode
-    blowup vs 1/6 of the default 16 g heap), not a local-mode tune;
-    ``SPARK_GRAFT_STATE_BACKEND`` (rocksdb | heap | auto) overrides
-    for scale sweeps and A/Bs. Results are byte-identical either way
-    (the oracle pins them); only the state backend changes.
+    The threshold (tables.BIG_CORPUS_BYTES) is a first-principles
+    heap-fit bound: 256 MB of source parquet ≈ 2.5 GB decoded state
+    (dictionary/RLE decode, JVM object headers, store key/value copies)
+    ≈ 1/6 of the default 16 g driver heap — not a local-mode tune.
+    Results are byte-identical either way (the oracle pins them); only
+    the state backend changes.
 
     Round 11 also REVERTED the round-10 changelog-checkpointing +
     trackTotalNumberOfRows=false knobs (VERDICT r10 ask #2): the
@@ -108,14 +96,7 @@ def _stream_state_store(spark: SparkSession, sf_dir: str):
     (`cleared: false`) — changelog mode defers snapshot consolidation
     to background maintenance threads whose deferred work cost more
     than the per-commit delta saved on a one-or-two-commit drain."""
-    backend = os.environ.get("SPARK_GRAFT_STATE_BACKEND", "auto")
-    if backend == "auto":
-        backend = (
-            "heap"
-            if _corpus_bytes(sf_dir) < _STATE_ONHEAP_MAX_SRC_BYTES
-            else "rocksdb"
-        )
-    if backend == "heap":
+    if tables.corpus_bytes(sf_dir) < tables.BIG_CORPUS_BYTES:
         yield  # default HDFSBackedStateStoreProvider
         return
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -191,31 +172,6 @@ def _drain_to_parquet(
         )
 
 
-def _stage_stream_dir(sf_dir: str, table: str) -> str:
-    """File streaming sources need a DIRECTORY; the corpus ships
-    read-only single files — stage a symlink dir under /tmp (no data
-    copy, corpus untouched). One directory PER TABLE: a file-stream
-    source reads every parquet in its directory, so mixing tables in
-    one staging dir would splice mismatched schemas into the stream."""
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(src):
-        # Spark-written table (e.g. the 10x scale corpus): already a
-        # single-table directory of part files — stream it directly.
-        # A symlink to the DIRECTORY inside a staging dir would nest
-        # it one level down where the file-stream source won't list it.
-        return src
-    stage = os.path.join(
-        "/tmp/covid_19_fl_spark-stream-t",
-        sf_dir.strip("/").replace("/", "_"),
-        table,
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, f"{table}.parquet")
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return stage
-
-
 @query(
     "st_cusum_drift",
     oracle=f"""
@@ -273,22 +229,12 @@ def st_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     against Kafka with the state store bounding memory, while the
     batch oracle remains the offline backfill/audit path.
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    # Same physical-type normalization as tables.load (nanos long vs
-    # micros timestamp_ntz), applied to the STREAM.
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     # The CUSUM fold is order-sensitive ACROSS micro-batches: the
     # oracle assumes one global event_id-ordered fold, but the monitor
-    # only sorts within a batch. Pin maxFilesPerTrigger above any
-    # corpus's file count so availableNow drains the whole directory
-    # in ONE batch (asserted below) — a multi-batch drain whose files
-    # arrive out of event_id order would fold out of order.
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
+    # only sorts within a batch. tables.stream drains the whole
+    # directory in ONE batch (asserted below) — a multi-batch drain
+    # whose files arrive out of event_id order would fold out of order.
+    src = tables.stream(spark, sf_dir, "events")
     # Integer-floor the value BEFORE the monitor's ×1e6 quantization:
     # floor(value) ≤ 2^53/1e6, so round(float(v)*1e6) is exact and the
     # state fold is bit-identical to the oracle's BIGINT arithmetic.
@@ -698,12 +644,8 @@ def st_dedup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle equality is exact (a watermark variant could
     re-admit a duplicate whose first sighting was evicted).
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     src = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        tables.stream(spark, sf_dir, "events")
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
@@ -943,20 +885,13 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     output must live on disk, not the heap (pinned by the round-9
     full 100× sweep, where the on-heap variant OOM'd).
     """
-    ostage = _stage_stream_dir(sf_dir, "orders")
-    lstage = _stage_stream_dir(sf_dir, "lineitem")
-    oschema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
-    lschema = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).schema
     orders = (
-        spark.readStream.schema(oschema)
-        .parquet(ostage)
+        tables.stream(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
-    items = (
-        spark.readStream.schema(lschema)
-        .parquet(lstage)
-        .select("l_orderkey", "l_returnflag", "l_extendedprice")
+    items = tables.stream(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag", "l_extendedprice"
     )
     joined = items.join(orders, items.l_orderkey == orders.o_orderkey).select(
         "l_returnflag", "l_extendedprice"
@@ -1134,18 +1069,9 @@ def st_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound it with a watermark (append mode) — the bounded complete-
     mode drain keeps the oracle equality exact instead.
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    src = spark.readStream.schema(schema).parquet(stage)
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     # Pre-project to the three columns the session agg consumes so the
     # stream ships no dead columns into the merging-state shuffle.
-    src = src.select("user_id", "ts", "value")
+    src = tables.stream(spark, sf_dir, "events").select("user_id", "ts", "value")
     agg = (
         src.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"

@@ -26,19 +26,14 @@ accumulation across shuffles, doubles only in final rounded ratios.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults
+from . import tables
 from .suite import _t, query  # noqa: F401  (_t used by later additions)
-from .suite_r4 import (
-    _drain_to_parquet,
-    _stage_stream_dir,
-    _stream_shuffle_partitions,
-)
+from .suite_r4 import _drain_to_parquet, _stream_shuffle_partitions
 
 # Event-time band for the watermarked join: a lineitem matches its
 # order only if shipped within BAND days of the order date. TPC-H ships
@@ -85,17 +80,8 @@ def st_stream_stream_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the difference between O(stream) and O(window) memory on an
     unbounded deployment.
     """
-    ostage = _stage_stream_dir(sf_dir, "orders")
-    lstage = _stage_stream_dir(sf_dir, "lineitem")
-    oschema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
-    lschema = spark.read.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ).schema
-    ensure_session_defaults(spark)
     orders = (
-        spark.readStream.schema(oschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(ostage)
+        tables.stream(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select(
             "o_orderkey",
@@ -104,9 +90,7 @@ def st_stream_stream_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("o_ts", _SSJ_WM_DELAY)
     )
     items = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(lstage)
+        tables.stream(spark, sf_dir, "lineitem")
         .select(
             "l_orderkey",
             "l_returnflag",
@@ -193,21 +177,9 @@ def st_windowed_counts_append_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (none exist in the bounded drain, which is why the oracle
     equality is exact rather than approximate).
     """
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        src.select("ts", "value")
+        tables.stream(spark, sf_dir, "events")
+        .select("ts", "value")
         .withWatermark("ts", f"{_WMAGG_DELAY_MIN} minutes")
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
@@ -1221,23 +1193,13 @@ def st_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, mergeable, watermark-evictable in the unbounded deployment.
     The rank window partitions by day (domain-bounded) and never sees
     raw events, only the aggregated state."""
-    import os as _os
     import uuid as _uuid
 
     from pyspark.sql import Window
 
-    path = _os.path.join(sf_dir, "events.parquet")
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(path).schema
-    src = spark.readStream.schema(schema).parquet(stage)
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        src.filter(F.col("user_id").isNotNull())
+        tables.stream(spark, sf_dir, "events")
+        .filter(F.col("user_id").isNotNull())
         .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )

@@ -28,20 +28,15 @@ pinned empirically rather than assumed.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .confs import ensure_session_defaults
+from . import tables
 from .llmops.dedup import portable_hash
 from .suite import _t, query
-from .suite_r4 import (
-    _drain_to_parquet,
-    _stage_stream_dir,
-    _stream_shuffle_partitions,
-)
+from .suite_r4 import _drain_to_parquet, _stream_shuffle_partitions
 
 # ---------------------------------------------------------------------------
 # x_kcore — k-core decomposition of the co-order parts graph
@@ -513,17 +508,8 @@ def st_stream_left_outer_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     its final value and flushes exactly the closed null rows. Scale:
     identical state posture to st_stream_stream_join_wm — per-side
     state holds only the trailing band+delay window."""
-    ostage = _stage_stream_dir(sf_dir, "orders")
-    lstage = _stage_stream_dir(sf_dir, "lineitem")
-    oschema = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).schema
-    lschema = spark.read.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ).schema
-    ensure_session_defaults(spark)
     orders = (
-        spark.readStream.schema(oschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(ostage)
+        tables.stream(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select(
             "o_orderkey",
@@ -532,9 +518,7 @@ def st_stream_left_outer_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("o_ts", _LOJ_WM_DELAY)
     )
     items = (
-        spark.readStream.schema(lschema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(lstage)
+        tables.stream(spark, sf_dir, "lineitem")
         .select(
             "l_orderkey",
             "l_returnflag",
@@ -627,21 +611,9 @@ def st_sliding_counts_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     state stays bounded by the watermark horizon, finalized windows
     leave the store on emit. The same plan pointed at Kafka is the
     canonical trailing-48h dashboard feed."""
-    stage = _stage_stream_dir(sf_dir, "events")
-    ensure_session_defaults(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1_000_000)
-        .parquet(stage)
-    )
-    ts_type = schema["ts"].dataType.simpleString()
-    if ts_type in ("bigint", "long"):
-        src = src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type != "timestamp":
-        src = src.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        src.select("ts", "value")
+        tables.stream(spark, sf_dir, "events")
+        .select("ts", "value")
         .withWatermark("ts", f"{_SLIDE_DELAY_MIN} minutes")
         .groupBy(F.window("ts", "2 days", "1 day").alias("w"))
         .agg(

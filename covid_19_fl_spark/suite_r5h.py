@@ -220,17 +220,13 @@ def st_cdc_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles on k once and rewrites the k-sized table; a production
     run partitions the table by key range so the merge rewrites only
     touched partitions."""
-    import os as _os
     import uuid as _uuid
 
+    from . import tables
     from .sinks.batch import ParquetTable
-    from .suite_r4 import _stage_stream_dir
 
-    stage = _stage_stream_dir(sf_dir, "orders")
-    schema = spark.read.parquet(_os.path.join(sf_dir, "orders.parquet")).schema
     src = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        tables.stream(spark, sf_dir, "orders")
         .select(
             (F.col("o_orderkey") % 1000).cast("long").alias("k"),
             F.col("o_orderkey").cast("long").alias("w"),

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .confs import ensure_session_defaults
 from .suite import _t, query
 
 _TOP_M = 3
@@ -332,10 +331,12 @@ def x_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-10 neighbor-array generate could not be split and measured
     slower), the center degree is attached to the 2|E|-row adjacency
     BEFORE the wedge join instead of a wedge-sized join after it, and
-    the adjacency anti-join probes the (u, w) AGGREGATE rather than
-    the raw wedge stream (operators/graph.ra_link_scores — full
-    accounting in its docstring). RA still folds each
-    pair's SORTED degree list sequentially — the order-pinned
+    the adjacency anti-join (a broadcast probe of the edge set) runs
+    on the RAW wedge stream before the (u, w) aggregation, pruning the
+    wedges that close into triangles before collect_list buffers them
+    (operators/graph.ra_link_scores — full accounting in its
+    docstring). RA still folds each pair's SORTED degree list
+    sequentially — the order-pinned
     summation both engines replay bit-for-bit before the 6dp round.
     Output is the global top-50 by (RA, CN) via
     TakeOrderedAndProject — at 100 TB you'd cap per-u instead
@@ -700,15 +701,11 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch, the aggregate state stays |dim|-bounded."""
     import uuid as _uuid
 
-    from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
+    from . import tables
+    from .suite_r4 import _stream_shuffle_partitions
 
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    ensure_session_defaults(spark)
-    # ts is unused here, but the schema read must survive both parquet
-    # physical types the corpus has shipped (nanos long / micros).
-    ensure_session_defaults(spark)
-    stage = _stage_stream_dir(sf_dir, "events")
-    src = spark.readStream.schema(spark.read.parquet(stage).schema).parquet(stage)
+    src = tables.stream(spark, sf_dir, "events")
     enriched = src.withColumn(
         "nk", F.pmod(F.col("user_id"), F.lit(25)).cast("int")
     ).join(F.broadcast(nation), F.col("nk") == F.col("n_nationkey"))

@@ -489,14 +489,12 @@ def st_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mostly-distinct 100 TB corpus is a corpus-sized driver collect.
     Executors write survivors distributed; the driver only ever sees
     the ≤|langs|-row final rollup."""
-    import os
     import uuid
 
+    from . import tables
     from .llmops import dedup
-    from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
+    from .suite_r4 import _stream_shuffle_partitions
 
-    stage = _stage_stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
     sig = F.concat_ws(
         "-",
         F.transform(
@@ -504,8 +502,7 @@ def st_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     src = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
+        tables.stream(spark, sf_dir, "documents")
         .select("lang", sig.alias("sig"))
         .dropDuplicates(["lang", "sig"])
     )

@@ -784,14 +784,12 @@ def st_exactly_once_batchid(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (bounded |langs| rows per batch), executors write them
     distributed, and the driver only sees the final ≤|langs|-row
     rollup. Replays cost one partition rewrite, never a table scan."""
-    import os
     import uuid
 
-    from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
+    from . import tables
+    from .suite_r4 import _stream_shuffle_partitions
 
-    stage = _stage_stream_dir(sf_dir, "documents")
-    schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    src = spark.readStream.schema(schema).parquet(stage).select("lang", "n_chars")
+    src = tables.stream(spark, sf_dir, "documents").select("lang", "n_chars")
     ledger = f"/tmp/st_eo_ledger_{uuid.uuid4().hex[:8]}"
     redelivered = {"done": False}
 

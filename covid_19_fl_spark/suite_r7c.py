@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .confs import ensure_session_defaults
 from .llmops import text as T
 from .suite import _t, query
 
@@ -417,7 +416,6 @@ def st_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .suite_r4 import _stream_shuffle_partitions
 
-    ensure_session_defaults(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "ts")
     [mrow] = ev.agg(F.max("ts").alias("m")).collect()
     tick_day = mrow.m.replace(hour=0, minute=0, second=0, microsecond=0)

@@ -49,11 +49,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import tables
-from .confs import ensure_session_defaults
 from .llmops import multimodal
 from .sinks.versioned import VersionedParquetTable
 from .suite import _t, query
-from .suite_r4 import _stage_stream_dir, _stream_shuffle_partitions
+from .suite_r4 import _stream_shuffle_partitions
 from .suite_r8b import _tag
 
 # ---------------------------------------------------------------------------
@@ -391,17 +390,7 @@ if HAVE_PROTOBUF:
         (st_cusum_drift) on the successor API."""
         from .streaming import stateful
 
-        stage = _stage_stream_dir(sf_dir, "events")
-        ensure_session_defaults(spark)
-        schema = spark.read.parquet(
-            os.path.join(sf_dir, "events.parquet")
-        ).schema
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1_000_000)
-            .parquet(stage)
-            .select("event_type")
-        )
+        src = tables.stream(spark, sf_dir, "events").select("event_type")
         out = stateful.running_totals_tws(src, "event_type")
         sink = f"st_tws_{uuid.uuid4().hex[:8]}"
         with _stream_shuffle_partitions(spark):

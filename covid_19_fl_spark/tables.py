@@ -1,9 +1,11 @@
 """Loaders for the driver's parquet test corpus (TESTDATA.md).
 
-All reads go through ``spark.read.parquet`` so Catalyst gets predicate
-pushdown + column pruning for free; callers select/filter on the result
-and the scan narrows accordingly (verify with ``.explain`` —
-``PushedFilters`` / ``ReadSchema``).
+The one module that knows how a corpus table is read: ``load`` for
+batch reads, ``stream`` for file-stream reads, both normalized by
+``_normalize``. Batch reads go through ``spark.read.parquet`` so
+Catalyst gets predicate pushdown + column pruning for free; callers
+select/filter on the result and the scan narrows accordingly (verify
+with ``.explain`` — ``PushedFilters`` / ``ReadSchema``).
 """
 
 from __future__ import annotations
@@ -75,17 +77,17 @@ def data_pin_level(sf_dir: str):
     )
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one corpus table as a DataFrame (lazy parquet scan).
-
-    ``events.parquet`` carries TIMESTAMP(NANOS), which Spark's parquet
-    reader rejects by default; we read nanos as long (runtime conf) and
-    rebuild a microsecond timestamp with integer division (``div`` keeps
-    the math in long space — double division would lose precision above
-    2^53 ns).
-    """
+def _path(sf_dir: str, name: str) -> str:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one corpus table as a DataFrame (lazy parquet scan),
+    normalized to the column types the suite assumes (``_normalize``).
+    """
+    path = _path(sf_dir, name)
     # Date semantics (timestamp→date casts) must not depend on the host
     # JVM timezone of whatever session the caller hands us; nanosAsLong
     # keeps the events.parquet physical-type read stable. Both are part
@@ -93,20 +95,53 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # registered query pins at entry — asserting it here too keeps
     # direct library callers (tests, pipelines) order-independent.
     ensure_session_defaults(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        df = spark.read.parquet(path)
-        # The corpus has shipped ts as TIMESTAMP(NANOS) (read as long via
-        # nanosAsLong) and as TIMESTAMP(MICROS) (read as timestamp_ntz).
-        # Normalize both to a session-TZ (UTC) timestamp so downstream
-        # date_trunc/window semantics are identical either way.
-        ts_type = df.schema["ts"].dataType.simpleString()
-        if ts_type in ("bigint", "long"):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type != "timestamp":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return _canonicalize(name, spark.read.parquet(path))
+    return _normalize(name, spark.read.parquet(path))
+
+
+def stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Open one corpus table as a file stream (the incremental-load
+    source every ``st_*`` query drains with an availableNow trigger),
+    with the same schema and normalization as ``load``.
+
+    The stream's schema is the table's physical schema read under the
+    pinned session defaults. ``maxFilesPerTrigger`` is pinned above any
+    corpus's file count, so an availableNow drain takes the whole table
+    in ONE micro-batch: order-sensitive folds (st_cusum_drift) and the
+    single-batch exactness assertions depend on it."""
+    path = _path(sf_dir, name)
+    ensure_session_defaults(spark)
+    schema = spark.read.parquet(path).schema
+    src = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1_000_000)
+        .parquet(_stage_stream_dir(sf_dir, name))
+    )
+    return _normalize(name, src)
+
+
+def _stage_stream_dir(sf_dir: str, table: str) -> str:
+    """File streaming sources need a DIRECTORY; the corpus ships
+    read-only single files — stage a symlink dir under /tmp (no data
+    copy, corpus untouched). One directory PER TABLE: a file-stream
+    source reads every parquet in its directory, so mixing tables in
+    one staging dir would splice mismatched schemas into the stream."""
+    src = _path(sf_dir, table)
+    if os.path.isdir(src):
+        # Spark-written table (e.g. the 10x scale corpus): already a
+        # single-table directory of part files — stream it directly.
+        # A symlink to the DIRECTORY inside a staging dir would nest
+        # it one level down where the file-stream source won't list it.
+        return src
+    stage = os.path.join(
+        "/tmp/covid_19_fl_spark-stream-t",
+        sf_dir.strip("/").replace("/", "_"),
+        table,
+    )
+    os.makedirs(stage, exist_ok=True)
+    link = os.path.join(stage, f"{table}.parquet")
+    if not os.path.exists(link):
+        os.symlink(src, link)
+    return stage
 
 
 # Canonical column types the suite's query code assumes. The corpus has
@@ -125,11 +160,23 @@ _CANONICAL_TYPES: dict[str, dict[str, str]] = {
 }
 
 
-def _canonicalize(name: str, df: DataFrame) -> DataFrame:
-    want = _CANONICAL_TYPES.get(name)
-    if not want:
+def _normalize(name: str, df: DataFrame) -> DataFrame:
+    """Pin one table's type-sensitive columns (batch or stream frame)."""
+    if name == "events":
+        # events.parquet has shipped ts as TIMESTAMP(NANOS), which Spark's
+        # parquet reader rejects by default (read as long via
+        # nanosAsLong), and as TIMESTAMP(MICROS) (read as timestamp_ntz).
+        # Normalize both to a session-TZ (UTC) timestamp so downstream
+        # date_trunc/window semantics are identical either way. ``div``
+        # keeps the nanos math in long space — double division would
+        # lose precision above 2^53 ns.
+        ts_type = df.schema["ts"].dataType.simpleString()
+        if ts_type in ("bigint", "long"):
+            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        elif ts_type != "timestamp":
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    for col, typ in want.items():
+    for col, typ in _CANONICAL_TYPES.get(name, {}).items():
         if col in df.columns and df.schema[col].dataType.simpleString() != typ:
             df = df.withColumn(col, F.col(col).cast(typ))
     return df

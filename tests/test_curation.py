@@ -61,19 +61,25 @@ def test_curation_funnel(spark, corpus, eval_set):
 
 
 @pytest.mark.parametrize(
-    "cfg",
+    "cfg, with_bench",
     [
-        curation.CurationConfig(
-            min_quality=0.3, min_tokens=5, near_dup_threshold=0.4
+        (
+            curation.CurationConfig(
+                min_quality=0.3, min_tokens=5, near_dup_threshold=0.4
+            ),
+            True,
         ),
-        curation.CurationConfig(
-            min_quality=0.3, min_tokens=5, near_dup_threshold=0.4, sample_pct=50
+        (
+            curation.CurationConfig(
+                min_quality=0.3, min_tokens=5, near_dup_threshold=0.4, sample_pct=50
+            ),
+            False,
         ),
-        curation.CurationConfig(min_quality=0.0, min_tokens=1),
+        (curation.CurationConfig(min_quality=0.0, min_tokens=1), False),
     ],
     ids=["default", "with-sample", "keep-all"],
 )
-def test_funnel_counts_matches_funnel_report(spark, corpus, eval_set, cfg, request):
+def test_funnel_counts_matches_funnel_report(spark, corpus, eval_set, cfg, with_bench):
     """The round-10 single-pass funnel (one conditional aggregation
     over survivor flags) must report row-for-row what the six-leg
     union over curate() stages reports — with and without a benchmark
@@ -81,7 +87,7 @@ def test_funnel_counts_matches_funnel_report(spark, corpus, eval_set, cfg, reque
     cfg only (round 11): the decontamination flag is independent of
     the sample/keep-all knobs, and each leg is four full LSH+CC
     pipeline executions of pytest wall."""
-    benches = (None, eval_set) if request.node.callspec.id == "default" else (None,)
+    benches = (None, eval_set) if with_bench else (None,)
     for bench in benches:
         expected = sorted(
             (r.stage_order, r.stage, r.n_docs)

@@ -120,7 +120,7 @@ def test_stage_stream_dir_layouts(tmp_path):
     part files below where the file-stream source lists)."""
     import os
 
-    from covid_19_fl_spark.suite_r4 import _stage_stream_dir
+    from covid_19_fl_spark.tables import _stage_stream_dir
 
     sf = tmp_path / "sf"
     sf.mkdir()

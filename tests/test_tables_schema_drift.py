@@ -1,9 +1,10 @@
 """Regression tests for corpus schema drift (the round-2 breakage):
 ``events.ts`` has shipped as parquet TIMESTAMP(NANOS) (read as long via
 ``nanosAsLong``) AND as TIMESTAMP(MICROS) (read as timestamp_ntz).
-``tables.load`` must normalize both to a session-TZ timestamp without
-touching the driver's read-only corpus — so these tests write both
-physical variants to tmp and load them through the real code path.
+``tables.load`` and ``tables.stream`` must normalize both to a
+session-TZ timestamp without touching the driver's read-only corpus —
+so these tests write both physical variants to tmp and read them
+through the real code paths.
 """
 
 from __future__ import annotations
@@ -42,6 +43,8 @@ def _write_events(tmpdir: str, unit: str) -> str:
 
 @pytest.mark.parametrize("unit", ["ns", "us"])
 def test_events_ts_loads_for_both_physical_types(spark, tmp_path, unit):
+    import uuid
+
     sf_dir = _write_events(str(tmp_path), unit)
     df = tables.load(spark, sf_dir, "events")
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
@@ -49,6 +52,24 @@ def test_events_ts_loads_for_both_physical_types(spark, tmp_path, unit):
         (r["event_id"], r["ts"].replace(tzinfo=None)) for r in df.collect()
     )
     assert got == [(r[0], r[1]) for r in _ROWS]
+
+    # An availableNow drain of tables.stream yields load's schema and rows.
+    src = tables.stream(spark, sf_dir, "events")
+    assert src.isStreaming and src.schema == df.schema
+    sink = f"drift_{unit}_{uuid.uuid4().hex[:8]}"
+    q = (
+        src.writeStream.format("memory")
+        .queryName(sink)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        q.stop()
+    drained = spark.table(sink)
+    assert drained.schema == df.schema
+    assert sorted(drained.collect()) == sorted(df.collect())
 
 
 def test_events_ts_date_cast_agrees_across_units(spark, tmp_path):

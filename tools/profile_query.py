@@ -1,14 +1,14 @@
-"""Round-10 optimization profiler.
+"""Per-query optimization profiler.
 
 Times individual registered queries in ISOLATION (warmup + N timed
 repeats, min kept — the same steady-state methodology as bench.py) and
-captures ``.explain("formatted")`` output to ``plans/r10/<name>_<tag>.txt``
-for the optimization round's before/after evidence.
+captures ``.explain("formatted")`` output to ``<out-dir>/<name>_<tag>.txt``
+for an optimization round's before/after evidence.
 
 Usage:
-    python tools/profile_r10.py --tag before q1 q2 ...
-    python tools/profile_r10.py --tag after --repeats 3 cur_funnel
-    python tools/profile_r10.py --plan-only --tag before cur_funnel
+    python tools/profile_query.py --out-dir plans/r11 --tag before q1 q2 ...
+    python tools/profile_query.py --out-dir plans/r11 --tag after --repeats 3 cur_funnel
+    python tools/profile_query.py --out-dir plans/r11 --plan-only --tag before cur_funnel
 
 Prints one JSON line per query: {"query": ..., "sec": min, "runs": [...]}.
 """
@@ -32,17 +32,15 @@ from covid_19_fl_spark.session import get_spark  # noqa: E402
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
+    ap.add_argument("--out-dir", required=True, help="plan capture directory, e.g. plans/r11")
     ap.add_argument("--tag", default=None, help="plan file suffix (before/after)")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--plan-only", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    spark = get_spark("covid_19_fl_spark-profile-r10")
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10"
-    )
-    os.makedirs(plans_dir, exist_ok=True)
+    spark = get_spark("covid_19_fl_spark-profile")
+    os.makedirs(args.out_dir, exist_ok=True)
 
     results = []
     for name in args.names:
@@ -50,16 +48,17 @@ def main() -> None:
             print(json.dumps({"query": name, "error": "unknown"}))
             continue
         fn = suite.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"r10-profile: {name}")
+        spark.sparkContext.setJobDescription(f"profile: {name}")
+        plan = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
         if args.tag:
             df = fn(spark, args.sf_dir)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{args.tag}.txt"), "w") as fh:
+            with open(plan, "w") as fh:
                 fh.write(buf.getvalue())
         if args.plan_only:
-            print(json.dumps({"query": name, "plan": f"plans/r10/{name}_{args.tag}.txt"}))
+            print(json.dumps({"query": name, "plan": plan}))
             continue
         runs = []
         # warmup
