@@ -382,7 +382,7 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
-def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
+def dup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair list → (doc_id,
     cluster_id) with cluster_id = min doc id of the component (the
     canonical representative a dedup pass keeps).
@@ -417,10 +417,10 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     cluster scale the fan-in (32) keeps every intermediate partition
     node-bounded.
 
-    ``max_iter`` is retained for API compatibility and ignored: the
-    pass count is structural (log of partition count), so there is no
-    unconverged state to guard — silently-partial labels, the failure
-    mode the old round budget raised on, cannot occur.
+    There is no round budget: the pass count is structural (log of
+    partition count), so there is no unconverged state to guard —
+    silently-partial labels, the failure mode the old round budget
+    raised on, cannot occur.
 
     Determinism: output is one row per node with the exact component
     minimum, identical under any input partitioning (pinned by

@@ -109,6 +109,78 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return tables.load(spark, sf_dir, name)
 
 
+# ---------------------------------------------------------------------------
+# Shared graphs. Each graph has ONE Spark builder and ONE DuckDB CTE,
+# so a query and its oracle (and sibling queries on the same graph)
+# can never silently diverge on what the graph IS.
+# ---------------------------------------------------------------------------
+
+
+def parts_edges(spark: SparkSession, sf_dir: str, mod: int = 5) -> DataFrame:
+    """The parts-bought-together graph: distinct undirected (u, v)
+    part pairs, u < v, that co-occur in an order with
+    ``l_orderkey % mod = 0`` (the deterministic thinning makes the
+    same subgraph in any engine). The build is a self-equi-join on
+    l_orderkey — co-partitioned and bounded (≤7 lines/order ⇒ ≤21
+    pairs/order, no quadratic group blowup). Callers add their own
+    columns and cache."""
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_orderkey") % mod == 0)
+        .select("l_orderkey", "l_partkey")
+    )
+    a, b = li.alias("a"), li.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
+        .distinct()
+    )
+
+
+def parts_edges_sql(mod: int = 5) -> str:
+    """DuckDB twin of :func:`parts_edges`: the ``li``/``edges`` CTEs,
+    without the leading ``WITH`` so an oracle can append its own."""
+    return f"""li AS (
+      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % {mod} = 0
+    ), edges AS (
+      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+      FROM li a JOIN li b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+    )"""
+
+
+def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer↔supplier trading graph: distinct trading pairs
+    from orders⋈lineitem, both directions, as (src, dst). Node ids
+    2·custkey / 2·suppkey+1 keep the two key spaces disjoint."""
+    orders = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    pairs = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("a"),
+            (F.col("l_suppkey") * 2 + 1).alias("b"),
+        )
+        .distinct()
+    )
+    return pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+    )
+
+
+# DuckDB twin of trade_edges: the pairs/edges CTEs, no leading WITH.
+TRADE_EDGES_SQL = """pairs AS (
+      SELECT DISTINCT o_custkey*2 AS a, l_suppkey*2+1 AS b
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    ),
+    edges AS (SELECT a AS src, b AS dst FROM pairs
+              UNION ALL SELECT b AS src, a AS dst FROM pairs)"""
+
+
 # Hard ceiling for the two deliberately-uncapped lossless similarity
 # self-joins (dd_jaccard_prefix_join, dd_edit_distance_join). They are
 # oracle twins whose OUTPUT is expected-quadratic on duplicate-dense

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import ranks
-from .suite import _t, query
+from .suite import _t, parts_edges, parts_edges_sql, query
 
 
 def _d(c: str):
@@ -61,14 +61,8 @@ def _ols_line(sy_col: str, sxy_col: str, slope_scale: float, intercept_scale: fl
 
 @query(
     "x_triangle_count",
-    oracle="""
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), tri AS (
+    oracle=f"""
+    WITH {parts_edges_sql()}, tri AS (
       SELECT e1.u, e1.v, e2.v AS w
       FROM edges e1 JOIN edges e2 ON e2.u = e1.v
       WHERE EXISTS (SELECT 1 FROM edges e3 WHERE e3.u = e1.u AND e3.v = e2.v)
@@ -96,25 +90,10 @@ def x_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     %5 order filter thins the graph deterministically (same subgraph in
     any engine); at 100 TB you'd instead pre-bucket edges by u.
     """
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        # The edge set feeds six subtrees (wedges ×2, closure, node/edge
-        # counts); without caching, Spark recomputes the self-join +
-        # distinct per subtree — the costliest stage, several times over.
-        .cache()
-    )
+    # The edge set feeds six subtrees (wedges ×2, closure, node/edge
+    # counts); without caching, Spark recomputes the self-join +
+    # distinct per subtree — the costliest stage, several times over.
+    edges = parts_edges(spark, sf_dir).cache()
     e1, e2 = edges.alias("e1"), edges.alias("e2")
     wedges = e1.join(e2, F.col("e1.v") == F.col("e2.u")).select(
         F.col("e1.u").alias("u"), F.col("e1.v").alias("v"), F.col("e2.v").alias("w")
@@ -1906,15 +1885,9 @@ def _bfs_oracle(rounds: int = 3) -> str:
     """Unrolled-CTE replica of the bounded-round BFS relaxation —
     integer distances only, so every round is exact on both engines."""
     parts = [
-        """
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), e0 AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), adj AS (
-      SELECT u, v FROM e0 UNION ALL SELECT v AS u, u AS v FROM e0
+        f"""
+    WITH {parts_edges_sql()}, adj AS (
+      SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
     ), nodes AS (
       SELECT DISTINCT u AS node FROM adj
     ), d0 AS (
@@ -1957,21 +1930,7 @@ def x_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums). At 100 TB the adjacency list is the thing to pre-bucket by
     u so the per-round join never re-shuffles the graph.
     """
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
+    e0 = parts_edges(spark, sf_dir)
     adj = e0.unionByName(
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).cache()

@@ -17,7 +17,7 @@ from . import tables
 from .llmops import dedup, similarity, text
 from .operators import bloom, ranks
 from .suite import ORACLES as _ORACLES
-from .suite import _t, query
+from .suite import _t, parts_edges, parts_edges_sql, query
 
 # ---------------------------------------------------------------------------
 # Benchmark contamination audit (decontamination pass)
@@ -1422,7 +1422,9 @@ def st_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, mergeable, and at 100 TB the same plan runs unmodified
     against a Kafka source with a watermark bounding the state store.
     """
-    import uuid as _uuid
+    # Late import: suite_r4 registers its queries after this module's,
+    # and a top-level import would reorder the registry.
+    from .suite_r4 import _drain_to_memory
 
     src = tables.stream(spark, sf_dir, "events")
     agg = (
@@ -1432,30 +1434,8 @@ def st_stream_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(28,4)")).alias("tv"),
         )
     )
-    sink = f"st_daily_{_uuid.uuid4().hex[:8]}"
-    # Late import: suite_r4 loads after this module, but by call time
-    # both are registered. The pin bounds per-partition state-store
-    # maintenance during the bounded drain (see suite_r4).
-    from .suite_r4 import _stream_shuffle_partitions
-
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_stream_daily_counts: availableNow drain did not "
-                    "finish within 120s — refusing to read a partial "
-                    "complete-mode aggregate"
-                )
-        finally:
-            q.stop()
-    return spark.table(sink).select(
+    out, _ = _drain_to_memory(spark, agg, "st_stream_daily_counts", "complete")
+    return out.select(
         F.col("w.start").cast("date").alias("event_date"),
         "n_events",
         F.col("tv").cast("double").alias("total_value"),
@@ -2444,15 +2424,9 @@ def dd_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_degree_distribution",
-    oracle="""
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), e0 AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), adj AS (
-      SELECT u FROM e0 UNION ALL SELECT v FROM e0
+    oracle=f"""
+    WITH {parts_edges_sql()}, adj AS (
+      SELECT u FROM edges UNION ALL SELECT v FROM edges
     ), deg AS (
       SELECT u, CAST(COUNT(*) AS BIGINT) AS degree FROM adj GROUP BY 1
     )
@@ -2469,21 +2443,7 @@ def x_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two map-combinable count aggs over the edge list (each endpoint
     contributes once — degree = incident edge count); the histogram
     is |distinct degrees| rows."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-    )
+    e0 = parts_edges(spark, sf_dir)
     adj = e0.select("u").unionAll(e0.select(F.col("v").alias("u")))
     deg = adj.groupBy("u").agg(F.count("*").cast("long").alias("degree"))
     return deg.groupBy("degree").agg(F.count("*").cast("long").alias("n_nodes"))

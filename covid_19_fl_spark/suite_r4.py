@@ -108,6 +108,54 @@ def _stream_state_store(spark: SparkSession, sf_dir: str):
         yield
 
 
+def _await_drain(q, name: str, timeout_sec: int) -> list[dict]:
+    """Wait for an availableNow query to finish, stop it either way,
+    and return its non-empty ``recentProgress`` entries. Raises
+    ``TimeoutError`` on a partial drain — callers must never read a
+    partial sink."""
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"{name}: availableNow drain did not finish within "
+                f"{timeout_sec}s — refusing to read a partial sink"
+            )
+    finally:
+        progress = [p for p in q.recentProgress if p]
+        q.stop()
+    return progress
+
+
+def _data_batches(progress: list[dict]) -> int:
+    """Number of micro-batches in ``progress`` that consumed input."""
+    return sum(1 for p in progress if p.get("numInputRows", 0) > 0)
+
+
+def _drain_to_memory(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    name: str,
+    mode: str,
+    timeout_sec: int = 120,
+) -> tuple[DataFrame, list[dict]]:
+    """availableNow drain of a BOUNDED streaming output (|keys| or
+    |windows| rows) into a driver-heap memory sink, under the drain
+    shuffle-width pin. ``mode`` is the output mode (complete, append or
+    update). Returns (the sink table, the query's recentProgress) so
+    callers keep their own batch-count assertions. Data-sized outputs
+    go through :func:`_drain_to_parquet` instead."""
+    sink = f"{name}_{uuid.uuid4().hex[:8]}"
+    with _stream_shuffle_partitions(spark):
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        progress = _await_drain(q, name, timeout_sec)
+    return spark.table(sink), progress
+
+
 def _drain_to_parquet(
     spark: SparkSession,
     stream_df: DataFrame,
@@ -116,12 +164,13 @@ def _drain_to_parquet(
     timeout_sec: int = 600,
 ) -> tuple[DataFrame, int]:
     """availableNow drain of a potentially DATA-SIZED streaming output:
-    RocksDB state store + distributed foreachBatch parquet writes
-    instead of the driver-heap memory sink (a 100× join output is tens
-    of millions of rows — a memory sink materializes all of them in
-    the driver JVM). foreachBatch is AT-LEAST-ONCE: an epoch retried
-    after a sink failure redelivers the same batch_id, so each batch
-    writes mode("overwrite") into its OWN batch_id=N subdirectory —
+    the corpus-size-chosen state store (``_stream_state_store``) plus
+    distributed foreachBatch parquet writes instead of the driver-heap
+    memory sink (a 100× join output is tens of millions of rows — a
+    memory sink materializes all of them in the driver JVM).
+    foreachBatch is AT-LEAST-ONCE: an epoch retried after a sink
+    failure redelivers the same batch_id, so each batch writes
+    mode("overwrite") into its OWN batch_id=N subdirectory —
     a redelivery rewrites its own partition instead of double-
     appending rows (idempotent, the K2/exactly-once-ledger posture).
     Batch 0 clears the per-(query, corpus) dest dir first, so each run
@@ -146,17 +195,7 @@ def _drain_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not q.awaitTermination(timeout_sec):
-                raise TimeoutError(
-                    f"{name}: availableNow drain did not finish within "
-                    f"{timeout_sec}s — refusing to aggregate a partial sink"
-                )
-        finally:
-            data_batches = sum(
-                1 for p in q.recentProgress if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
+        data_batches = _data_batches(_await_drain(q, name, timeout_sec))
     try:
         # recursiveFileLookup: the per-batch subdirs are plain names
         # (b0, b1, ...), NOT key=value partition dirs — the drained
@@ -252,36 +291,14 @@ def st_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         slack=_CUSUM_SLACK,
         threshold=_CUSUM_THRESHOLD,
     )
-    sink = f"st_cusum_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            mon.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_cusum_drift: availableNow drain did not finish "
-                    "within 120s — refusing to read partial update-mode "
-                    "state"
-                )
-        finally:
-            data_batches = sum(
-                1
-                for p in q.recentProgress
-                if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
+    out, progress = _drain_to_memory(spark, mon, "st_cusum_drift", "update")
+    data_batches = _data_batches(progress)
     if data_batches > 1:
         raise AssertionError(
             f"st_cusum_drift: drain took {data_batches} data batches — "
             "the single-batch fold-order assumption is violated; raise "
             "maxFilesPerTrigger"
         )
-    out = spark.table(sink)
     # Final state per key: the update-mode row with the largest n_seen.
     return out.groupBy("key").agg(
         F.max("n_seen").alias("n_seen"),
@@ -649,26 +666,9 @@ def st_dedup_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type")
         .dropDuplicates(["user_id", "event_type"])
     )
-    sink = f"st_dedup_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            src.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_dedup_distinct_users: availableNow drain did not "
-                    "finish within 120s — refusing to count a partial sink"
-                )
-        finally:
-            q.stop()
+    out, _ = _drain_to_memory(spark, src, "st_dedup_distinct_users", "append")
     return (
-        spark.table(sink)
-        .groupBy("event_type")
+        out.groupBy("event_type")
         .agg(F.count("*").cast("long").alias("n_users"))
     )
 

@@ -26,14 +26,12 @@ accumulation across shuffles, doubles only in final rounded ratios.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import tables
-from .suite import _t, query  # noqa: F401  (_t used by later additions)
-from .suite_r4 import _drain_to_parquet, _stream_shuffle_partitions
+from .suite import _t, parts_edges, parts_edges_sql, query
+from .suite_r4 import _data_batches, _drain_to_memory, _drain_to_parquet
 
 # Event-time band for the watermarked join: a lineitem matches its
 # order only if shipped within BAND days of the order date. TPC-H ships
@@ -187,36 +185,17 @@ def st_windowed_counts_append_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(28,4)")).alias("tv"),
         )
     )
-    sink = f"st_wmagg_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_windowed_counts_append_wm: availableNow drain "
-                    "did not finish within 120s — refusing to read a "
-                    "partial append-mode sink"
-                )
-        finally:
-            data_batches = sum(
-                1
-                for p in q.recentProgress
-                if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
+    out, progress = _drain_to_memory(
+        spark, agg, "st_windowed_counts_append_wm", "append"
+    )
+    data_batches = _data_batches(progress)
     if data_batches > 1:
         raise AssertionError(
             f"st_windowed_counts_append_wm: drain took {data_batches} "
             "data batches — the deterministic-watermark assumption is "
             "violated; raise maxFilesPerTrigger"
         )
-    return spark.table(sink).select(
+    return out.select(
         F.col("w.start").cast("date").alias("event_date"),
         F.col("n_events").cast("long").alias("n_events"),
         F.col("tv").cast("double").alias("total_value"),
@@ -507,14 +486,8 @@ def x_percent_rank_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_connected_components",
-    oracle="""
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 7 = 0
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), und AS (
+    oracle=f"""
+    WITH {parts_edges_sql(7)}, und AS (
       SELECT u, v FROM edges UNION SELECT v, u FROM edges
     ), nodes AS (
       SELECT DISTINCT u AS id FROM und
@@ -553,25 +526,10 @@ def x_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels are deterministic under any partitioning."""
     from .llmops import dedup
 
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 7 == 0)
-        .select("l_orderkey", "l_partkey")
+    edges = parts_edges(spark, sf_dir, mod=7).select(
+        F.col("u").alias("id_a"), F.col("v").alias("id_b")
     )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("id_a"),
-            F.col("b.l_partkey").alias("id_b"),
-        )
-        .distinct()
-    )
-    labels = dedup.dup_clusters(edges, max_iter=50)
+    labels = dedup.dup_clusters(edges)
     return labels.groupBy(
         F.col("cluster_id").cast("long").alias("component_id")
     ).agg(F.count("*").cast("long").alias("n_nodes"))
@@ -1193,8 +1151,6 @@ def st_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, mergeable, watermark-evictable in the unbounded deployment.
     The rank window partitions by day (domain-bounded) and never sees
     raw events, only the aggregated state."""
-    import uuid as _uuid
-
     from pyspark.sql import Window
 
     agg = (
@@ -1203,25 +1159,8 @@ def st_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"st_topk_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_topk_windowed: availableNow drain did not finish "
-                    "within 120s — refusing to read a partial "
-                    "complete-mode aggregate"
-                )
-        finally:
-            q.stop()
-    state = spark.table(sink).select(
+    out, _ = _drain_to_memory(spark, agg, "st_topk_windowed", "complete")
+    state = out.select(
         F.col("w.start").cast("date").alias("event_date"),
         "user_id",
         F.col("n_events").cast("long").alias("n_events"),

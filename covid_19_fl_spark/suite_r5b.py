@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .llmops.dedup import PORTABLE_PRIME, portable_hash
-from .suite import _t, query
+from .suite import _t, parts_edges, parts_edges_sql, query
 
 # ---------------------------------------------------------------------------
 # dd_edit_distance_join — SymSpell deletion-neighborhood ed<=1 join
@@ -720,17 +720,11 @@ def _sssp_oracle(rounds: int = _SSSP_ROUNDS) -> str:
     """Unrolled-CTE replica of the bounded-round min-plus relaxation
     (the x_bfs_distances recipe with integer edge weights)."""
     parts = [
-        """
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), e0 AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), adj AS (
-      SELECT u, v, 1 + ((u + v) % 5) AS w FROM e0
+        f"""
+    WITH {parts_edges_sql()}, adj AS (
+      SELECT u, v, 1 + ((u + v) % 5) AS w FROM edges
       UNION ALL
-      SELECT v AS u, u AS v, 1 + ((u + v) % 5) AS w FROM e0
+      SELECT v AS u, u AS v, 1 + ((u + v) % 5) AS w FROM edges
     ), nodes AS (
       SELECT DISTINCT u AS node FROM adj
     ), d0 AS (
@@ -778,23 +772,8 @@ def x_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncates the doubling relaxation lineage each round (the
     iterative-loop discipline every bounded-round plan here uses).
     """
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    e0 = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .withColumn("w", 1 + (F.col("u") + F.col("v")) % 5)
+    e0 = parts_edges(spark, sf_dir).withColumn(
+        "w", 1 + (F.col("u") + F.col("v")) % 5
     )
     adj = e0.unionByName(
         e0.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")

@@ -28,15 +28,13 @@ pinned empirically rather than assumed.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import tables
 from .llmops.dedup import portable_hash
-from .suite import _t, query
-from .suite_r4 import _drain_to_parquet, _stream_shuffle_partitions
+from .suite import _t, parts_edges, parts_edges_sql, query
+from .suite_r4 import _data_batches, _drain_to_memory, _drain_to_parquet
 
 # ---------------------------------------------------------------------------
 # x_kcore — k-core decomposition of the co-order parts graph
@@ -59,14 +57,8 @@ def _kcore_oracle(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
     # expand the 12-stage chain to 3^12 copies of the base scan
     # (observed as "Too many open files" before any row flows).
     parts = [
-        """
-    WITH li AS MATERIALIZED (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 7 = 0
-    ), e0 AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    )"""
+        f"""
+    WITH {parts_edges_sql(7)}, e0 AS MATERIALIZED (SELECT u, v FROM edges)"""
     ]
     for i in range(1, rounds + 1):
         p = i - 1
@@ -113,23 +105,8 @@ def x_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import kcore
 
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 7 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("id_a"),
-            F.col("b.l_partkey").alias("id_b"),
-        )
-        .distinct()
+    edges = parts_edges(spark, sf_dir, mod=7).select(
+        F.col("u").alias("id_a"), F.col("v").alias("id_b")
     )
     return kcore(edges, _KCORE_K, max_rounds=_KCORE_ROUNDS)
 
@@ -621,36 +598,15 @@ def st_sliding_counts_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(28,4)")).alias("tv"),
         )
     )
-    sink = f"st_slide_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_sliding_counts_wm: availableNow drain did not "
-                    "finish within 120s — refusing to read a partial "
-                    "append-mode sink"
-                )
-        finally:
-            data_batches = sum(
-                1
-                for p in q.recentProgress
-                if p and p.get("numInputRows", 0) > 0
-            )
-            q.stop()
+    out, progress = _drain_to_memory(spark, agg, "st_sliding_counts_wm", "append")
+    data_batches = _data_batches(progress)
     if data_batches > 1:
         raise AssertionError(
             f"st_sliding_counts_wm: drain took {data_batches} data "
             "batches — the deterministic-watermark assumption is "
             "violated; raise maxFilesPerTrigger"
         )
-    return spark.table(sink).select(
+    return out.select(
         F.col("w.start").alias("win_start"),
         F.col("n_events").cast("long").alias("n_events"),
         F.col("tv").cast("double").alias("total_value"),

@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .suite import _t, query
+from . import tables
+from .suite import _t, parts_edges, parts_edges_sql, query
+from .suite_r4 import _drain_to_memory
 
 _TOP_M = 3
 
@@ -282,14 +284,8 @@ def dd_edit_topm_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_link_prediction",
-    oracle="""
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), adj AS (
+    oracle=f"""
+    WITH {parts_edges_sql()}, adj AS (
       SELECT u AS a, v AS b FROM edges UNION ALL SELECT v, u FROM edges
     ), deg AS (
       SELECT a AS z, COUNT(*) AS d FROM adj GROUP BY 1
@@ -344,23 +340,8 @@ def x_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import ra_link_scores
 
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        # feeds two subtrees (adjacency + the anti probe)
-        .cache()
-    )
+    # feeds two subtrees (adjacency + the anti probe)
+    edges = parts_edges(spark, sf_dir).cache()
     scores = ra_link_scores(edges)
     top = scores.orderBy(
         F.col("ra").desc(), F.col("cn").desc(), F.col("u").asc(), F.col("w").asc()
@@ -699,11 +680,6 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     spells. At 100 TB the same plan runs against Kafka with the dim
     in a Delta/parquet snapshot: the static side broadcasts per
     micro-batch, the aggregate state stays |dim|-bounded."""
-    import uuid as _uuid
-
-    from . import tables
-    from .suite_r4 import _stream_shuffle_partitions
-
     nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     src = tables.stream(spark, sf_dir, "events")
     enriched = src.withColumn(
@@ -713,24 +689,8 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum(F.col("value").cast("decimal(28,4)")).alias("tv"),
     )
-    sink = f"st_enrich_{_uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError(
-                    "st_stream_static_enrich: availableNow drain did not "
-                    "finish within 120s"
-                )
-        finally:
-            q.stop()
-    return spark.table(sink).select(
+    out, _ = _drain_to_memory(spark, agg, "st_stream_static_enrich", "complete")
+    return out.select(
         "n_name", "n_events", F.col("tv").cast("double").alias("total_value")
     )
 

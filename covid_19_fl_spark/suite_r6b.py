@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from . import tables
 from .llmops import similarity
 from .operators.graph import HITS_SCALE, hits
 from .suite import _t, query
@@ -83,9 +84,7 @@ def x_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("src"), F.col("l_suppkey").alias("dst"))
         .distinct()
     )
-    from . import tables as _tb
-
-    return hits(edges, iterations=_HITS_ITERS, pin=_tb.data_pin_level(sf_dir))
+    return hits(edges, iterations=_HITS_ITERS, pin=tables.data_pin_level(sf_dir))
 
 
 _BQ_QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7]
@@ -491,7 +490,6 @@ def st_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ≤|langs|-row final rollup."""
     import uuid
 
-    from . import tables
     from .llmops import dedup
     from .suite_r4 import _stream_shuffle_partitions
 

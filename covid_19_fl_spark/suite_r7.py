@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from .confs import scoped_conf
-from .suite import _t, query
+from .suite import _t, parts_edges, parts_edges_sql, query
 
 _LP_TOP_M = 3
 
@@ -38,13 +38,7 @@ _LP_TOP_M = 3
 @query(
     "x_link_prediction_topm",
     oracle=f"""
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), adj AS (
+    WITH {parts_edges_sql()}, adj AS (
       SELECT u AS a, v AS b FROM edges UNION ALL SELECT v, u FROM edges
     ), deg AS (
       SELECT a AS z, COUNT(*) AS d FROM adj GROUP BY 1
@@ -103,23 +97,8 @@ def x_link_prediction_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     is gone along with the double-execution it papered over."""
     from .operators.graph import ra_link_scores
 
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        # feeds two subtrees (adjacency + the anti probe)
-        .cache()
-    )
+    # feeds two subtrees (adjacency + the anti probe)
+    edges = parts_edges(spark, sf_dir).cache()
     scores = ra_link_scores(edges)
     # (u,w,cn,ra) → both directions in ONE generate: same rows as the
     # former two-branch unionAll, without consuming scores twice.
@@ -627,14 +606,8 @@ _LPA_ROUNDS = 3
 
 
 def _lpa_oracle() -> str:
-    head = """
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), adj AS (
+    head = f"""
+    WITH {parts_edges_sql()}, adj AS (
       SELECT u AS a, v AS b FROM edges UNION ALL SELECT v, u FROM edges
     ), r0 AS (
       SELECT DISTINCT a AS node, a AS label FROM adj
@@ -658,29 +631,6 @@ def _lpa_oracle() -> str:
         + f"""
     SELECT node, label AS community FROM r{_LPA_ROUNDS}
     """
-    )
-
-
-def _parts_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The parts-bought-together edge list (undirected, u < v,
-    deduped) shared by x_label_propagation and x_modularity
-    (suite_r7f) — one definition so the clustering and its quality
-    score can never silently diverge on what the graph IS (round-7
-    advice)."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
     )
 
 
@@ -750,7 +700,7 @@ def x_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the round-10 plan accounting. localCheckpoint truncates
     lineage per round so round N's plan doesn't replay rounds 1..N-1.
     """
-    labels, _ = _lpa_labels(_parts_edges(spark, sf_dir))
+    labels, _ = _lpa_labels(parts_edges(spark, sf_dir))
     return labels.select("node", F.col("label").alias("community"))
 
 

@@ -32,9 +32,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from . import tables
 from .llmops import text as T
 from .llmops.dedup import portable_hash
-from .suite import _t, query
+from .suite import (
+    TRADE_EDGES_SQL,
+    _t,
+    parts_edges,
+    parts_edges_sql,
+    query,
+    trade_edges,
+)
 
 # ---------------------------------------------------------------------------
 # tx_readability — Flesch-Kincaid via vowel-group syllables
@@ -432,14 +440,8 @@ def ss_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_clustering_coefficient",
-    oracle="""
-    WITH li AS (
-      SELECT l_orderkey, l_partkey FROM lineitem WHERE l_orderkey % 5 = 0
-    ), edges AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM li a JOIN li b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ), tri AS (
+    oracle=f"""
+    WITH {parts_edges_sql()}, tri AS (
       SELECT e1.u, e1.v, e2.v AS w
       FROM edges e1 JOIN edges e2 ON e2.u = e1.v
       WHERE EXISTS (SELECT 1 FROM edges e3 WHERE e3.u = e1.u AND e3.v = e2.v)
@@ -476,22 +478,7 @@ def x_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     count. Three hash shuffles on vertex keys, each skew-bounded by
     max degree; the %5 filter deterministically thins the graph, same
     as the sibling graph queries."""
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 5 == 0)
-        .select("l_orderkey", "l_partkey")
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v"))
-        .distinct()
-        .cache()
-    )
+    edges = parts_edges(spark, sf_dir).cache()
     e1, e2 = edges.alias("e1"), edges.alias("e2")
     wedges = e1.join(e2, F.col("e1.v") == F.col("e2.u")).select(
         F.col("e1.u").alias("u"),
@@ -791,12 +778,7 @@ def _ppr_oracle(iters: int = _PPR_ITERS) -> str:
     from .operators.graph import PR_SCALE
 
     sql = f"""
-    WITH pairs AS (
-      SELECT DISTINCT o_custkey*2 AS a, l_suppkey*2+1 AS b
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (SELECT a AS src, b AS dst FROM pairs
-              UNION ALL SELECT b AS src, a AS dst FROM pairs),
+    WITH {TRADE_EDGES_SQL},
     outd AS (SELECT src, COUNT(*) AS out FROM edges GROUP BY src),
     adj AS (SELECT e.src, e.dst, o.out FROM edges e JOIN outd o ON e.src = o.src),
     nodes AS (SELECT src AS node_id FROM edges UNION SELECT dst FROM edges),
@@ -843,25 +825,12 @@ def x_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeping output proportional to the seed neighborhood."""
     from .operators.graph import personalized_pagerank
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    cust = _t(spark, sf_dir, "customer")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("a"),
-            (F.col("l_suppkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
+    edges = trade_edges(spark, sf_dir)
+    seeds = (
+        _t(spark, sf_dir, "customer")
+        .filter(F.col("c_nationkey") == 0)
+        .select((F.col("c_custkey") * 2).alias("node_id"))
     )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    seeds = cust.filter(F.col("c_nationkey") == 0).select(
-        (F.col("c_custkey") * 2).alias("node_id")
-    )
-    from . import tables as _tb
-
     return personalized_pagerank(
-        edges, seeds, iterations=_PPR_ITERS, pin=_tb.data_pin_level(sf_dir)
+        edges, seeds, iterations=_PPR_ITERS, pin=tables.data_pin_level(sf_dir)
     ).filter(F.col("pr") > 0)

@@ -20,8 +20,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from . import tables
 from .llmops import text as T
 from .suite import _t, query
+from .suite_r4 import _data_batches, _drain_to_memory
 
 # ---------------------------------------------------------------------------
 # tx_textrank — keyword extraction by PageRank over co-occurrence
@@ -113,9 +115,7 @@ def tx_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("u").alias("src"), F.col("v").alias("dst")).union(
         pairs.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    from . import tables as _tb
-
-    ranked = pagerank(edges, iterations=_TR_ITERS, pin=_tb.data_pin_level(sf_dir))
+    ranked = pagerank(edges, iterations=_TR_ITERS, pin=tables.data_pin_level(sf_dir))
     top = ranked.orderBy(F.col("pr").desc(), F.col("node_id").asc()).limit(
         _TR_TOPK
     )
@@ -414,8 +414,6 @@ def st_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
     import uuid
 
-    from .suite_r4 import _stream_shuffle_partitions
-
     ev = _t(spark, sf_dir, "events").select("event_id", "ts")
     [mrow] = ev.agg(F.max("ts").alias("m")).collect()
     tick_day = mrow.m.replace(hour=0, minute=0, second=0, microsecond=0)
@@ -455,25 +453,10 @@ def st_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(F.count("*").alias("n"))
     )
-    sink = f"st_late_audit_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(180):
-                raise TimeoutError(
-                    "st_late_data_audit: availableNow drain did not "
-                    "finish within 180s — refusing a partial sink"
-                )
-        finally:
-            progress = [p for p in q.recentProgress if p]
-            q.stop()
-    data_batches = sum(1 for p in progress if p.get("numInputRows", 0) > 0)
+    out, progress = _drain_to_memory(
+        spark, agg, "st_late_data_audit", "append", timeout_sec=180
+    )
+    data_batches = _data_batches(progress)
     if data_batches != 3:
         raise AssertionError(
             f"st_late_data_audit: drain took {data_batches} data "
@@ -489,14 +472,10 @@ def st_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expected drop count computed INDEPENDENTLY of the stream metric:
     # distinct echoed days, from the same batch frame the staging wrote
     n_late_expected = echo.select(F.to_date("ts").alias("d")).distinct().count()
-    [krow] = (
-        spark.table(sink)
-        .agg(
-            F.count("*").cast("long").alias("nw"),
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("nr"),
-        )
-        .collect()
-    )
+    [krow] = out.agg(
+        F.count("*").cast("long").alias("nw"),
+        F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("nr"),
+    ).collect()
     return spark.createDataFrame(
         [(krow.nw, krow.nr, n_echo_rows, n_late_expected, n_late_observed)],
         "n_windows_emitted long, n_rows_emitted long, n_echo_rows long,"

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from .llmops import clustering
 from .llmops import text as T
 from .operators import ranks
-from .suite import _t, query
+from .suite import _t, parts_edges, query
 from .suite_advanced import _ols_line
 
 # Canonical tokenization/fingerprint oracle fragments — imported, not
@@ -297,18 +297,18 @@ def x_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree, per-community rollup, internal-edge count via two
     broadcast-able label lookups) and a 1-row broadcast for m — no new
     data-sized state beyond what LPA already shuffles."""
-    from .suite_r7 import _lpa_labels, _parts_edges
+    from .suite_r7 import _lpa_labels
 
     # One shared edge-list definition AND one shared edge FRAME with
     # LPA (round 10): the edge build (lineitem self-join + distinct)
     # used to run twice — once inside x_label_propagation's own
-    # _parts_edges call and once here. Cached because three branches
+    # parts_edges call and once here. Cached because three branches
     # (LPA's adjacency, m, internal count) consume it. Session-
     # lifetime cache is the repo-wide precedent for bounded graph
     # frames — ~|E| of a 1/5-sampled co-purchase graph, not data-sized
     # state. Degrees are read off LPA's checkpointed neighbor arrays
     # (deg = size(dsts)) instead of a separate adjacency aggregate.
-    edges = _parts_edges(spark, sf_dir).cache()
+    edges = parts_edges(spark, sf_dir).cache()
     labels, nbrs = _lpa_labels(edges)
     lab = labels.select("node", F.col("label").alias("community"))
     deg = nbrs.select(

@@ -43,7 +43,6 @@ reference has no media or streaming surface (cv.py:1-173).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,7 +51,7 @@ from . import tables
 from .llmops import multimodal
 from .sinks.versioned import VersionedParquetTable
 from .suite import _t, query
-from .suite_r4 import _stream_shuffle_partitions
+from .suite_r4 import _drain_to_memory
 from .suite_r8b import _tag
 
 # ---------------------------------------------------------------------------
@@ -391,26 +390,8 @@ if HAVE_PROTOBUF:
         from .streaming import stateful
 
         src = tables.stream(spark, sf_dir, "events").select("event_type")
-        out = stateful.running_totals_tws(src, "event_type")
-        sink = f"st_tws_{uuid.uuid4().hex[:8]}"
-        with _stream_shuffle_partitions(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(120):
-                    raise TimeoutError(
-                        "st_tws_running_totals: availableNow drain did "
-                        "not finish within 120s"
-                    )
-            finally:
-                q.stop()
-        return (
-            spark.table(sink)
-            .groupBy("key")
-            .agg(F.max("running_total").cast("long").alias("running_total"))
+        totals = stateful.running_totals_tws(src, "event_type")
+        out, _ = _drain_to_memory(spark, totals, "st_tws_running_totals", "update")
+        return out.groupBy("key").agg(
+            F.max("running_total").cast("long").alias("running_total")
         )

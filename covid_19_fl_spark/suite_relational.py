@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import tables
 from .functions import litarrays
-from .suite import _t, query
+from .suite import TRADE_EDGES_SQL, _t, query, trade_edges
 
 # ---------------------------------------------------------------------------
 # Joins (SURVEY §2.4)
@@ -2136,12 +2137,7 @@ def _pagerank_oracle(iters: int = 5) -> str:
     from .operators.graph import PR_SCALE
 
     sql = f"""
-    WITH pairs AS (
-      SELECT DISTINCT o_custkey*2 AS a, l_suppkey*2+1 AS b
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    ),
-    edges AS (SELECT a AS src, b AS dst FROM pairs
-              UNION ALL SELECT b AS src, a AS dst FROM pairs),
+    WITH {TRADE_EDGES_SQL},
     outd AS (SELECT src, COUNT(*) AS out FROM edges GROUP BY src),
     adj AS (SELECT e.src, e.dst, o.out FROM edges e JOIN outd o ON e.src = o.src),
     nodes AS (SELECT src AS node_id FROM edges UNION SELECT dst FROM edges),
@@ -2173,22 +2169,8 @@ def x_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionings, reruns, and engines thanks to int64-only updates."""
     from .operators.graph import pagerank
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("a"),
-            (F.col("l_suppkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
-    )
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    from . import tables as _tb
-
-    return pagerank(edges, iterations=5, pin=_tb.data_pin_level(sf_dir))
+    edges = trade_edges(spark, sf_dir)
+    return pagerank(edges, iterations=5, pin=tables.data_pin_level(sf_dir))
 
 
 def _count_min_oracle(k: int = 20, depth: int = 4, width: int = 256) -> str:

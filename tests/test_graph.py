@@ -1,11 +1,20 @@
-"""operators.graph.pagerank — deterministic fixed-point iteration."""
+"""operators.graph.pagerank — deterministic fixed-point iteration —
+and the shared query graphs every graph query and oracle build on."""
 
 from __future__ import annotations
+
+import ast
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from covid_19_fl_spark import suite
 from covid_19_fl_spark.operators.graph import PR_SCALE, pagerank
+
+from .conftest import SF_SMOKE
+from .oracle import run_oracle
 
 
 @pytest.fixture(scope="module")
@@ -59,3 +68,77 @@ def test_dangling_sink_accumulates(spark):
     teleport = (PR_SCALE * 15 // 100) // n
     assert ranks[1] == teleport
     assert ranks[3] > ranks[2] > ranks[1]
+
+
+@pytest.mark.parametrize(
+    "mod", [5, 7, None], ids=["parts_mod5", "parts_mod7", "trade"]
+)
+def test_shared_graph_spark_equals_sql(spark, mod):
+    """Each shared graph's Spark builder and its oracle CTE produce
+    the same edge rows (columns, and the multiset of rows)."""
+    if mod is None:
+        df, cte = suite.trade_edges(spark, SF_SMOKE), suite.TRADE_EDGES_SQL
+    else:
+        df = suite.parts_edges(spark, SF_SMOKE, mod=mod)
+        cte = suite.parts_edges_sql(mod)
+    cols, rows = run_oracle(f"WITH {cte} SELECT * FROM edges", SF_SMOKE)
+    assert df.columns == cols
+    got = sorted(tuple(r) for r in df.collect())
+    assert got, "empty graph at SF_SMOKE — the comparison would be vacuous"
+    assert got == sorted(rows)
+
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "covid_19_fl_spark")
+
+# Each building block's defining spelling, and the one helper allowed
+# to spell it: (package-relative file, top-level def or assignment).
+_ONE_DEFINITION = {
+    # parts-graph self-join predicate, Spark and SQL spellings
+    r'a\.l_partkey"?\)?\s*<\s*(?:F\.col\(")?b\.l_partkey': {
+        ("suite.py", "parts_edges"),
+        ("suite.py", "parts_edges_sql"),
+    },
+    # trading-graph node encoding, Spark and SQL spellings
+    r'o_custkey"?\)?\s*\*\s*2': {
+        ("suite.py", "trade_edges"),
+        ("suite.py", "TRADE_EDGES_SQL"),
+    },
+    r'writeStream\.format\("memory"\)': {("suite_r4.py", "_drain_to_memory")},
+}
+
+
+def _top_level_owner(tree: ast.Module, lineno: int) -> str | None:
+    for node in tree.body:
+        # a decorated def starts at its first decorator (oracle SQL
+        # lives in the @query(...) call)
+        decorators = getattr(node, "decorator_list", [])
+        start = min([node.lineno] + [d.lineno for d in decorators])
+        if start <= lineno <= node.end_lineno:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                return node.name
+            if isinstance(node, ast.Assign) and isinstance(node.targets[0], ast.Name):
+                return node.targets[0].id
+    return None
+
+
+def test_shared_query_blocks_have_one_definition():
+    """The parts graph, the trading graph and the memory-sink drain
+    may be spelled ONLY inside their helpers — every query must call
+    the helper, so no hand-copied variant can drift from it."""
+    found = {pat: set() for pat in _ONE_DEFINITION}
+    for root, _dirs, files in os.walk(PKG):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, PKG)
+            with open(path, encoding="utf-8") as f:
+                src = f.read()
+            tree = None
+            for pat in _ONE_DEFINITION:
+                for m in re.finditer(pat, src):
+                    tree = tree or ast.parse(src)
+                    lineno = src.count("\n", 0, m.start()) + 1
+                    owner = _top_level_owner(tree, lineno) or f"line {lineno}"
+                    found[pat].add((rel, owner))
+    assert found == _ONE_DEFINITION

@@ -580,13 +580,12 @@ def test_dup_clusters_chain_exact_under_any_partitioning(spark):
     # structurally impossible (pass count is log of partition count,
     # not data-diameter). Pin the replacement contract instead: a
     # path graph — the old kernel's worst case — labels exactly, even
-    # when its edges are scattered across many partitions, and
-    # max_iter is inert.
+    # when its edges are scattered across many partitions.
     chain_edges = [(i + 1, i) for i in range(1, 200)]
     chain = spark.createDataFrame(
         chain_edges, "id_a long, id_b long"
     ).repartition(16)
-    rows = dedup.dup_clusters(chain, max_iter=1).collect()
+    rows = dedup.dup_clusters(chain).collect()
     assert {(r.doc_id, r.cluster_id) for r in rows} == {
         (i, 1) for i in range(1, 201)
     }
