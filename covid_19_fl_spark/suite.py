@@ -43,22 +43,26 @@ def drain_persisted_state(spark: SparkSession) -> None:
     keeps the within-query sharing those sites exist for and drops the
     cross-query residue.
 
-    Safe ONLY between top-level queries: unpersisting a localCheckpoint
-    frees blocks that its (lineage-truncated) frame cannot recompute,
-    so this must never run while a previous query's undrained frame is
-    still live — which is why it is called at registered-query ENTRY
-    (the previous query has been consumed by then in every sequential
-    harness: bench, full sweep, gate check, the driver session)."""
-    try:
-        spark.catalog.clearCache()
-    except Exception:  # noqa: BLE001 — drain is best-effort hygiene
-        pass
-    try:
-        jrdds = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in jrdds.values():
-            jrdd.unpersist(False)
-    except Exception:  # noqa: BLE001
-        pass
+    Sequential, single-threaded use only, at the OUTERMOST
+    registered-query entry: unpersisting a localCheckpoint frees blocks
+    that its (lineage-truncated) frame cannot recompute, so this must
+    never run while a previous query's undrained frame is still live,
+    nor while another thread builds or runs a query on the session.
+    At entry the previous query has been consumed in every sequential
+    harness (bench, full sweep, gate check, ``__spark_entry__``).
+
+    A failing drain raises, failing the query that triggered it, so the
+    harness records the error. The persistent-RDD map is walked by
+    index over a JVM array: iterating a py4j ``JavaMap`` ends on a Java
+    ``NoSuchElementException`` that costs ~20 ms even when the map is
+    empty."""
+    spark.catalog.clearCache()
+    jrdds = spark.sparkContext._jsc.getPersistentRDDs()
+    if jrdds.isEmpty():
+        return
+    ids = jrdds.keySet().toArray()
+    for i in range(len(ids)):
+        jrdds.get(ids[i]).unpersist(False)
 
 
 # Reentrancy latch: entry() / tests may compose registered queries; the

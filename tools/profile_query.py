@@ -10,7 +10,12 @@ Usage:
     python tools/profile_query.py --out-dir plans/r11 --tag after --repeats 3 cur_funnel
     python tools/profile_query.py --out-dir plans/r11 --plan-only --tag before cur_funnel
 
-Prints one JSON line per query: {"query": ..., "sec": min, "runs": [...]}.
+Prints one JSON line per query: {"query": ..., "sec": min, "runs": [...],
+"build_s": ..., "build_jobs": ...}. ``build_s`` is the fastest timed
+run's build, ``QUERIES[name](spark, sf)`` timed apart from ``.count()``;
+``build_jobs`` is the number of Spark jobs that build launched (table
+schema inference, per-round counts, eager checkpoints), counted in a
+per-run job group.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("covid_19_fl_spark-profile")
+    sc = spark.sparkContext
     os.makedirs(args.out_dir, exist_ok=True)
 
     results = []
@@ -48,7 +54,7 @@ def main() -> None:
             print(json.dumps({"query": name, "error": "unknown"}))
             continue
         fn = suite.QUERIES[name]
-        spark.sparkContext.setJobDescription(f"profile: {name}")
+        sc.setJobDescription(f"profile: {name}")
         plan = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
         if args.tag:
             df = fn(spark, args.sf_dir)
@@ -60,17 +66,31 @@ def main() -> None:
         if args.plan_only:
             print(json.dumps({"query": name, "plan": plan}))
             continue
-        runs = []
+        runs, builds = [], []
         # warmup
         fn(spark, args.sf_dir).count()
-        for _ in range(args.repeats):
+        for i in range(args.repeats):
+            group = f"profile:{name}:{i}"
+            sc.setJobGroup(group, f"profile: {name}")
             t0 = time.perf_counter()
-            fn(spark, args.sf_dir).count()
-            runs.append(round(time.perf_counter() - t0, 4))
-        rec = {"query": name, "sec": min(runs), "runs": runs}
+            df = fn(spark, args.sf_dir)
+            build_s = time.perf_counter() - t0
+            build_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            t1 = time.perf_counter()
+            df.count()
+            runs.append(round(build_s + time.perf_counter() - t1, 4))
+            builds.append((round(build_s, 4), build_jobs))
+        build_s, build_jobs = builds[runs.index(min(runs))]
+        rec = {
+            "query": name,
+            "sec": min(runs),
+            "runs": runs,
+            "build_s": build_s,
+            "build_jobs": build_jobs,
+        }
         results.append(rec)
         print(json.dumps(rec), flush=True)
-    spark.sparkContext.setJobDescription(None)
+    sc.setJobDescription(None)
     if results:
         print(json.dumps({"total_min": round(sum(r["sec"] for r in results), 3)}))
     try:
