@@ -3,6 +3,8 @@ over the reference's own fixture inputs (SURVEY §3.1-§3.3 replay)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +13,11 @@ from covid_19_fl_spark.sinks.batch import ParquetTable
 
 CASES_CSV = "/root/reference/datasets/csv/030262020.csv"
 COUNTIES = "/root/reference/datasets/json/florida_counties.json"
+
+pytestmark = pytest.mark.skipif(
+    not (os.path.exists(CASES_CSV) and os.path.exists(COUNTIES)),
+    reason="reference cases CSV or counties JSON absent",
+)
 
 
 @pytest.fixture(scope="module")

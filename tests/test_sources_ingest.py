@@ -20,6 +20,15 @@ from covid_19_fl_spark.sources import files as file_sources
 REF = "/root/reference/datasets"
 CASES_CSV = os.path.join(REF, "csv", "030262020.csv")
 COUNTIES_JSON = os.path.join(REF, "json", "florida_counties.json")
+OTHER_STATS_CSV = os.path.join(REF, "csv", "other_stats.csv")
+
+needs_cases_csv = pytest.mark.skipif(
+    not os.path.exists(CASES_CSV), reason="reference cases CSV absent"
+)
+needs_cases_csv_and_counties = pytest.mark.skipif(
+    not (os.path.exists(CASES_CSV) and os.path.exists(COUNTIES_JSON)),
+    reason="reference cases CSV or counties JSON absent",
+)
 
 
 @pytest.fixture(scope="module")
@@ -28,6 +37,7 @@ def cases(spark):
     return ingest.normalize_cases(raw).cache()
 
 
+@needs_cases_csv
 def test_csv_replay_rowcount_and_schema(cases):
     assert cases.count() == 2513
     names = [f.name for f in cases.schema.fields]
@@ -40,6 +50,7 @@ def test_csv_replay_rowcount_and_schema(cases):
     ] == "array<string>"
 
 
+@needs_cases_csv
 def test_csv_replay_age_canonicalization(cases):
     # 'Unknown' / blank ages → null int (SURVEY §1.2 canonical rule).
     ages = cases.select("age").where(F.col("age").isNotNull())
@@ -47,6 +58,7 @@ def test_csv_replay_age_canonicalization(cases):
     assert 0 <= lo <= hi <= 120
 
 
+@needs_cases_csv
 def test_csv_replay_travel_detail_tokens(cases):
     # Row 2 of the fixture: "Canada; NY; PA" → ["Canada", "NY", "PA"]
     # (title-case long tokens, preserve 2-char state codes — P4).
@@ -54,11 +66,13 @@ def test_csv_replay_travel_detail_tokens(cases):
     assert row.travel_detail == ["Canada", "NY", "PA"]
 
 
+@needs_cases_csv
 def test_csv_replay_dates(cases):
     row = cases.where(F.col("case_number") == 1).first()
     assert str(row.date_added) == "2020-03-13"
 
 
+@needs_cases_csv_and_counties
 def test_counties_dim_and_broadcast_join(spark, cases):
     counties = file_sources.read_counties_json(spark, COUNTIES_JSON)
     assert counties.count() == 67
@@ -72,6 +86,7 @@ def test_counties_dim_and_broadcast_join(spark, cases):
     assert alachua.location is not None and alachua.location.type == "Point"
 
 
+@needs_cases_csv_and_counties
 def test_attach_population_inner(spark, cases):
     counties = file_sources.read_counties_json(spark, COUNTIES_JSON)
     per_county = cases.groupBy("county").agg(F.count("*").alias("count"))
@@ -84,8 +99,11 @@ def test_attach_population_inner(spark, cases):
         assert ref[county] == pop
 
 
+@pytest.mark.skipif(
+    not os.path.exists(OTHER_STATS_CSV), reason="reference daily-stats CSV absent"
+)
 def test_daily_stats_delta(spark):
-    raw = file_sources.read_daily_stats_csv(spark, os.path.join(REF, "csv", "other_stats.csv"))
+    raw = file_sources.read_daily_stats_csv(spark, OTHER_STATS_CSV)
     stats = ingest.normalize_daily_stats(raw).orderBy("date").collect()
     assert len(stats) == 8
     # W4 seed-0 semantics: first delta equals the first value.
