@@ -313,10 +313,26 @@ def bench_names() -> list[str]:
     return head + tail
 
 
+def scale_factor(sf_dir: str) -> float:
+    """The scale factor named by the corpus path (``.../sf0.1`` → 0.1).
+
+    Raises ValueError for a path without ``sf<N>`` in it: the scale
+    factor decides the warmup, the pass count and the per-query GC."""
+    m = re.search(r"sf(\d+(?:\.\d+)?)", sf_dir)
+    if not m:
+        raise ValueError(f"corpus path names no scale factor (sf<N>): {sf_dir!r}")
+    return float(m.group(1))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else None
+    sf = scale_factor(sf_dir)
+    # The 10×/100× corpora (tools/scale_up.py writes them as sf1/sf10)
+    # run once, cold: per-row plan cost dwarfs the JIT/startup overhead
+    # a warmup amortizes, one pass over 10× data already dominates any
+    # noise floor, and a second pass over 60M rows would double a
+    # multi-hour run.
+    at_scale = sf >= 1
 
     spark = get_spark("covid_19_fl_spark-bench")
     # SPARK_GRAFT_BENCH_SKIP: comma-separated queries to exclude from a
@@ -350,12 +366,7 @@ def main() -> None:
     # passes measure steady-state plan execution (JMH-style warmup).
     # A query that fails is dropped from the timed set (and reported)
     # instead of sinking the whole harness — one bad plan must not
-    # zero out the entire round's numbers.
-    # SPARK_GRAFT_BENCH_WARMUP=0 skips the untimed pass — for the
-    # 10×/100× scale sweeps, where per-row plan cost dwarfs the
-    # fixed JIT/startup overhead the warmup exists to amortize and a
-    # second full pass over 60M rows would double a multi-hour run.
-    warmup = os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
+    # zero out the entire round's numbers. Skipped at scale (above).
     errors: dict[str, str] = {}
     exempt: dict[str, str] = {}
 
@@ -379,7 +390,7 @@ def main() -> None:
     cold: dict[str, float] = {}
     ok_names = []
     for name in names:
-        if not warmup:
+        if at_scale:
             ok_names.append(name)
             continue
         try:
@@ -393,9 +404,8 @@ def main() -> None:
     # Two timed passes, keep the per-query MINIMUM: the min of repeated
     # steady-state runs estimates plan cost with the machine-load noise
     # floor removed (a co-tenant burst inflates one pass, never both).
-    # SPARK_GRAFT_BENCH_PASSES overrides for the 10× scale check, where
-    # one pass over 10× data already dominates any noise floor.
-    passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
+    # One pass at scale (above).
+    passes = 1 if at_scale else 2
     timings: dict[str, float] = {}
     for _ in range(passes):
         for name in ok_names:
@@ -413,7 +423,7 @@ def main() -> None:
             t = round(time.perf_counter() - t0, 4)
             if name not in timings or t < timings[name]:
                 timings[name] = t
-            if sf >= 1:
+            if at_scale:
                 # Scale sweeps (10×/100×) shuffle GBs per query in ONE
                 # session; dereferenced shuffle files are only deleted
                 # after a JVM GC lets the ContextCleaner see them (the
@@ -429,7 +439,7 @@ def main() -> None:
     total = round(sum(timings.values()), 4)
     # The driver records only the TAIL of stdout, so a 140-query map on
     # one line overflows its capture and the machine-readable record is
-    # lost (BENCH_r02..r04 all show "parsed": null). Emit ONE compact
+    # lost (the driver then records "parsed": null). Emit ONE compact
     # JSON line — contract keys intact, "queries" trimmed to the
     # worst-10 plans (the ones worth reading in an artifact) — and
     # write the full per-query map to a sidecar file next to bench.py.
@@ -557,8 +567,8 @@ def main() -> None:
         "queries_full": sidecar,
     }
     # The summary line must be rebuildable even if stdout is mangled:
-    # BENCH_r07.json came back "parsed": null because JVM teardown noise
-    # (streaming state-store maintenance threads logging
+    # a round-7 driver record came back "parsed": null because JVM
+    # teardown noise (streaming state-store maintenance threads logging
     # RpcEnvStoppedException during interpreter exit) pushed the JSON
     # line out of the driver's stdout tail capture. Write the exact
     # summary to a sidecar FIRST, then tear Spark down cleanly —

@@ -7,7 +7,7 @@ in 4 isolated reruns. The suspect class was SESSION STATE that depends
 on which queries ran before you — unscoped ``spark.conf.set`` calls
 scattered through query bodies (``spark.sql.session.timeZone``,
 ``spark.sql.legacy.parquet.nanosAsLong``, Python-source filter
-pushdown). A prefix replay (``tools/replay_showcase.py``) did not
+pushdown). A replay of the showcase prefix in one session did not
 reproduce the flake, so round 10 removes the entire hazard class rather
 than one instance:
 

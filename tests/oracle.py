@@ -4,7 +4,8 @@ Runs a suite query on Spark and its oracle SQL on DuckDB over the same
 parquet tables, then compares row count, column names, and exact values
 after sorting rows (order-insensitive) and columns by name — a stricter
 local stand-in for the driver's value hash, so anything that passes
-here should hash-match in CORRECTNESS_r{N}.json.
+here should hash-match on the driver. ``tools/gate_check.py`` runs it
+over the whole registry.
 """
 
 from __future__ import annotations

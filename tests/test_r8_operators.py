@@ -1,7 +1,7 @@
 """Round-8 operators: the binaryFile media scan and resize pipeline
 promoted into the oracle gate (suite_r8), plus the optional-PIL JPEG
-branch. The oracle equivalence itself is attested by the full sweep /
-driver artifacts; these tests pin the Spark-side mechanics — file
+branch. The oracle equivalence itself is checked by tools/gate_check.py
+and the driver; these tests pin the Spark-side mechanics — file
 materialization idempotence, path-derived keys, scale metadata — on a
 tiny corpus so failures localize."""
 

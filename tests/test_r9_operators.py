@@ -1,7 +1,7 @@
 """Round-9 operators: table time travel under the oracle gate, the
 codec-free JPEG header parser, and the protobuf-gated
-transformWithStateInPandas oracle row. Oracle equivalence is attested
-by the full sweep / driver artifacts; these tests pin the mechanics —
+transformWithStateInPandas oracle row. Oracle equivalence is checked
+by tools/gate_check.py and the driver; these tests pin the mechanics —
 marker-walk parsing edge cases, snapshot immutability across
 overwrite/restore, cache idempotence, optional-dependency gating — on
 tiny inputs so failures localize."""

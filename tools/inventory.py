@@ -17,7 +17,8 @@ import os
 import sys
 from collections import Counter
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from covid_19_fl_spark import suite  # noqa: E402
 
@@ -62,7 +63,7 @@ def main() -> None:
         # the registry stores the conf-pinning wrapper (suite.query);
         # report the real implementation's location via __wrapped__
         code = inspect.unwrap(fn).__code__
-        loc = f"{os.path.relpath(code.co_filename, '/root/repo')}:{code.co_firstlineno}"
+        loc = f"{os.path.relpath(code.co_filename, REPO)}:{code.co_firstlineno}"
         doc = (fn.__doc__ or "").strip().splitlines()
         first = doc[0].rstrip() if doc else ""
         rows.append(
@@ -138,7 +139,7 @@ def main() -> None:
     for name, fam, loc, orc, pos, first in rows:
         first = first.replace("|", "\\|")
         out.append(f"| {name} | {fam} | `{loc}` | {orc} | {pos} | {first} |")
-    with open("/root/repo/INVENTORY.md", "w") as f:
+    with open(os.path.join(REPO, "INVENTORY.md"), "w") as f:
         f.write("\n".join(out) + "\n")
     print(f"INVENTORY.md written ({len(rows)} queries, {oracled} oracled)")
 
