@@ -382,6 +382,39 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 
+def min_root_labels():
+    """Union-find with path compression and union by min id, returned
+    as ``labels(pairs) -> (ids, roots)``: every id seen in the (a, b)
+    pairs, ascending, and its component's minimum id. Built per call
+    and closed over by the UDFs that run it (dup_clusters' contraction
+    pass, graph.grouped_components' per-cell closure), so cloudpickle
+    ships it by value: a Python worker need not import this package."""
+
+    def labels(pairs):
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for a, b in pairs:
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                if rb < ra:  # union by min id: root = component min
+                    ra, rb = rb, ra
+                parent[rb] = ra
+        ids = sorted(parent)
+        return ids, [find(i) for i in ids]
+
+    return labels
+
+
 def dup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over a near-dup pair list → (doc_id,
     cluster_id) with cluster_id = min doc id of the component (the
@@ -430,31 +463,16 @@ def dup_clusters(pairs: DataFrame) -> DataFrame:
 
     fan_in = 32
 
+    labels = min_root_labels()
+
     def forest(batches):
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    if rb < ra:  # union by min id: root = component min
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        if parent:
-            ids = sorted(parent)
-            yield pd.DataFrame(
-                {"src": ids, "dst": [find(i) for i in ids]}
-            )
+        ids, roots = labels(
+            ab
+            for pdf in batches
+            for ab in zip(pdf["src"].tolist(), pdf["dst"].tolist())
+        )
+        if ids:
+            yield pd.DataFrame({"src": ids, "dst": roots})
 
     df = pairs.select(
         F.col("id_a").cast("long").alias("src"),

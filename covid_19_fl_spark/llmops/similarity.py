@@ -56,6 +56,21 @@ def cosine_topk(
     Deterministic ranking: (rounded cosine desc, neighbor id asc) —
     rounding first makes the rank robust to last-ulp float noise.
     """
+    return _exact_topk(emb, query_ids, k, id_col, vec_col, "cos_sim", True)
+
+
+def _exact_topk(
+    emb: DataFrame,
+    query_ids: list[int],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    score_col: str,
+    unit: bool,
+) -> DataFrame:
+    """The brute-force top-k behind :func:`cosine_topk` (``unit``:
+    rows and queries unit-normalized first) and :func:`mips_topk`
+    (raw inner products), scored into ``score_col``."""
     import numpy as np
     import pandas as pd
 
@@ -68,11 +83,12 @@ def cosine_topk(
         # none of the query ids exist (e.g. empty corpus): an empty
         # result with the contract schema, not an np.stack crash
         return emb.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
+            [], f"query_id long, neighbor_id long, {score_col} double, rank int"
         )
     q_ids = np.array([r[0] for r in q_rows])
     Q = np.stack([np.asarray(r[1], dtype="float64") for r in q_rows])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    if unit:
+        Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
 
     def score(batches):
         for pdf in batches:
@@ -80,30 +96,31 @@ def cosine_topk(
                 continue
             ids = pdf[id_col].to_numpy()
             M = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            C = Mn @ Qn.T  # corpus-batch × queries
-            out = {"query_id": [], "neighbor_id": [], "cos_sim": []}
+            if unit:
+                M = M / np.linalg.norm(M, axis=1, keepdims=True)
+            C = M @ Q.T  # corpus-batch × queries
+            out = {"query_id": [], "neighbor_id": [], score_col: []}
             for j, qid in enumerate(q_ids):
                 col = np.round(C[:, j], 6)
                 mask = ids != qid
                 cand_ids, cand = ids[mask], col[mask]
-                # local top-k (cos desc, id asc) — order=(-cos, id)
+                # local top-k (score desc, id asc) — order=(-score, id)
                 order = np.lexsort((cand_ids, -cand))[:k]
                 out["query_id"].extend([qid] * len(order))
                 out["neighbor_id"].extend(cand_ids[order])
-                out["cos_sim"].extend(cand[order])
+                out[score_col].extend(cand[order])
             yield pd.DataFrame(out)
 
     local = emb.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cos_sim double"
+        score, f"query_id long, neighbor_id long, {score_col} double"
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
     )
     return (
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+        .select("query_id", "neighbor_id", score_col, "rank")
     )
 
 
@@ -278,6 +295,37 @@ def label_centroids(
     )
 
 
+def _ivf_route(
+    emb: DataFrame,
+    centroids: DataFrame,
+    query_ids: list[int],
+    id_col: str,
+    vec_col: str,
+    label_col: str,
+    nprobe: int,
+) -> DataFrame:
+    """IVF routing → (query_id, qvec, probe_label): each query's
+    ``nprobe`` nearest centroids by rounded cosine (label asc on ties),
+    against the broadcast |labels|-row centroid table."""
+    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    )
+    return (
+        queries.crossJoin(F.broadcast(centroids))
+        .withColumn("cdist", F.round(cosine(F.col("qvec"), F.col("centroid")), 6))
+        .withColumn(
+            "crank",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("cdist").desc(), F.col(label_col).asc()
+                )
+            ),
+        )
+        .filter(F.col("crank") <= F.lit(int(nprobe)))
+        .select("query_id", "qvec", F.col(label_col).alias("probe_label"))
+    )
+
+
 def ivf_topk(
     emb: DataFrame,
     query_ids: list[int],
@@ -298,22 +346,8 @@ def ivf_topk(
     shuffle across repeated probes (index build / nprobe sweeps)."""
     if centroids is None:
         centroids = label_centroids(emb, label_col, vec_col)
-    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    routed = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cdist", F.round(cosine(F.col("qvec"), F.col("centroid")), 6))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdist").desc(), F.col(label_col).asc()
-                )
-            ),
-        )
-        .filter(F.col("crank") <= F.lit(int(nprobe)))
-        .select("query_id", "qvec", F.col(label_col).alias("probe_label"))
+    routed = _ivf_route(
+        emb, centroids, query_ids, id_col, vec_col, label_col, nprobe
     )
     cluster = emb.select(id_col, vec_col, label_col)
     scored = (
@@ -370,8 +404,7 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     nprobe: int = 1,
 ) -> DataFrame:
-    """Top-k over a persisted :func:`build_ivf_index` index.
-    Ranking matches ``ivf_topk`` exactly (rounded cosine desc, id asc).
+    """:func:`ivf_topk` over a persisted :func:`build_ivf_index` index.
 
     Routing never touches the driver: the probe join broadcasts the
     routed (query, cluster) table and Spark's dynamic partition
@@ -384,40 +417,18 @@ def ivf_topk_indexed(
     with query-batch size; a 10⁶-query batch would have funneled
     through the driver."""
     centroids = spark.read.parquet(f"{path}/centroids")
-    vectors = spark.read.parquet(f"{path}/vectors")
-    queries = vectors.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    routed = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cdist", F.round(cosine(F.col("qvec"), F.col("centroid")), 6))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdist").desc(), F.col("label").asc()
-                )
-            ),
-        )
-        .filter(F.col("crank") <= F.lit(int(nprobe)))
-        .select("query_id", "qvec", F.col("label").alias("probe_label"))
-    )
-    scored = (
-        vectors.join(F.broadcast(routed), vectors["cluster"] == routed.probe_label)
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("qvec"), F.col(vec_col)), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
+    # build_ivf_index keeps its label_col name on the centroid table and
+    # stores the vectors' copy as the partition column ``cluster``.
+    label_col = next(c for c in centroids.columns if c != "centroid")
+    return ivf_topk(
+        spark.read.parquet(f"{path}/vectors"),
+        query_ids,
+        k,
+        id_col,
+        vec_col,
+        label_col="cluster",
+        nprobe=nprobe,
+        centroids=centroids.withColumnRenamed(label_col, "cluster"),
     )
 
 
@@ -791,62 +802,16 @@ def mips_topk(
     """Exact brute-force MAXIMUM-INNER-PRODUCT top-k for each query id
     — the recommendation-retrieval objective (user·item score), which
     cosine search gets WRONG whenever corpus norms vary: MIPS favors
-    long vectors, cosine ignores length. Same execution shape as
-    :func:`cosine_topk` (queries broadcast into an Arrow-batched
-    ``mapInPandas`` matmul, local top-k per batch, global top-k over a
-    |queries|·k-bounded intermediate; the corpus never shuffles), just
-    without the normalization step. The standard reduction to cosine
-    (augment each corpus vector with sqrt(M² − ‖x‖²) so angular search
-    ranks by inner product) is pinned equivalent in pytest.
+    long vectors, cosine ignores length. :func:`cosine_topk` without
+    the normalization step. The standard reduction to cosine (augment
+    each corpus vector with sqrt(M² − ‖x‖²) so angular search ranks by
+    inner product) is pinned equivalent in pytest.
 
     Deterministic ranking: (rounded dot desc, neighbor id asc) — dots
     here are 64-term double sums of float32 products, so 6dp rounding
     absorbs summation-order noise exactly as in cosine_topk.
     """
-    import numpy as np
-    import pandas as pd
-
-    q_rows = (
-        emb.filter(F.col(id_col).isin(query_ids))
-        .select(id_col, vec_col)
-        .collect()
-    )
-    if not q_rows:
-        return emb.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, dot double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.stack([np.asarray(r[1], dtype="float64") for r in q_rows])
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            M = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            C = M @ Q.T
-            out = {"query_id": [], "neighbor_id": [], "dot": []}
-            for j, qid in enumerate(q_ids):
-                col = np.round(C[:, j], 6)
-                mask = ids != qid
-                cand_ids, cand = ids[mask], col[mask]
-                order = np.lexsort((cand_ids, -cand))[:k]
-                out["query_id"].extend([qid] * len(order))
-                out["neighbor_id"].extend(cand_ids[order])
-                out["dot"].extend(cand[order])
-            yield pd.DataFrame(out)
-
-    local = emb.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, dot double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot", "rank")
-    )
+    return _exact_topk(emb, query_ids, k, id_col, vec_col, "dot", False)
 
 
 # Sign bits per packed word. 60 (not 64) so the left-fold acc*2 stays
@@ -1020,22 +985,8 @@ def ivfpq_topk(
     # the PQ codebooks (the books are sliced centroids — round 10;
     # previously pq_codebooks re-aggregated the corpus).
     centroids = label_centroids(emb, label_col, vec_col)
-    queries = emb.filter(F.col(id_col).isin(query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    routed = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cdist", F.round(cosine(F.col("qvec"), F.col("centroid")), 6))
-        .withColumn(
-            "crank",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdist").desc(), F.col(label_col).asc()
-                )
-            ),
-        )
-        .filter(F.col("crank") <= F.lit(int(nprobe)))
-        .select("query_id", "qvec", F.col(label_col).alias("probe_label"))
+    routed = _ivf_route(
+        emb, centroids, query_ids, id_col, vec_col, label_col, nprobe
     )
     books = _books_from_centroids(centroids, m, dims, label_col)
     subv = emb.select(

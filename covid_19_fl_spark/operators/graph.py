@@ -20,9 +20,11 @@ the portable MinHash family (llmops.dedup.PORTABLE_PRIME).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from ..llmops.dedup import min_root_labels
 
 # Fixed-point scale: ranks are bigint multiples of 1e-12. Total mass =
 # SCALE (±floor-division dust), so per-node ranks for graphs up to
@@ -244,31 +246,14 @@ def grouped_components(
     )
     schema = f"{out_fields}, id bigint, cluster_id bigint"
 
+    labels = min_root_labels()
+
     def cell_cc(pdf):
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for a, b in zip(pdf[src].tolist(), pdf[dst].tolist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min id keeps the root the component minimum
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-        ids = sorted(parent)
+        ids, roots = labels(zip(pdf[src].tolist(), pdf[dst].tolist()))
         head = pdf.iloc[0]
         out = {c: [head[c]] * len(ids) for c in group_cols}
         out["id"] = ids
-        out["cluster_id"] = [find(i) for i in ids]
+        out["cluster_id"] = roots
         return pd.DataFrame(out)
 
     return (
@@ -279,6 +264,53 @@ def grouped_components(
         )
         .groupBy(*group_cols)
         .applyInPandas(cell_cc, schema=schema)
+    )
+
+
+def min_plus_histogram(
+    edges: DataFrame, is_source: Column, rounds: int, weight: Column
+) -> DataFrame:
+    """Multi-source shortest distances by ``rounds`` rounds of min-plus
+    (Bellman-Ford) relaxation over the undirected edge list ``edges``
+    (u, v, …), each edge costing ``weight`` (a column of ``edges``; a
+    literal 1 gives BFS hop counts). Sources are the nodes where
+    ``is_source`` (over ``node``) holds. Output is the distance
+    histogram (dist, n_nodes), -1 = unreached within ``rounds``.
+
+    Each round joins the broadcast distance table (node-bounded, ≪ the
+    edge list) to the adjacency, so the adjacency never crosses an
+    exchange; the only shuffle per round is the min-combine agg. At a
+    scale where the table outgrows broadcast, drop the hint and
+    pre-bucket the adjacency by u; the join key layout is already
+    right. Integer weights keep every round exact, and the bounded
+    round count makes the oracle a finite CTE unroll.
+    """
+    adj = edges.unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"), *edges.columns[2:])
+    ).cache()
+    nodes = adj.select(F.col("u").alias("node")).distinct()
+    dist = nodes.filter(is_source).select(
+        "node", F.lit(0).cast("long").alias("dist")
+    )
+    for _ in range(rounds):
+        frontier = (
+            F.broadcast(dist)
+            .join(adj, dist["node"] == adj["u"])
+            .select(F.col("v").alias("node"), (F.col("dist") + weight).alias("dist"))
+        )
+        dist = (
+            dist.unionByName(frontier)
+            .groupBy("node")
+            .agg(F.min("dist").alias("dist"))
+            # dist appears twice per round (itself + the frontier join);
+            # without truncation the relaxation lineage doubles each
+            # round and the edge build replays 2^rounds times.
+            .localCheckpoint(eager=False)
+        )
+    return (
+        nodes.join(dist, "node", "left")
+        .groupBy(F.coalesce(F.col("dist"), F.lit(-1)).alias("dist"))
+        .agg(F.count("*").alias("n_nodes"))
     )
 
 

@@ -185,6 +185,100 @@ TRADE_EDGES_SQL = """pairs AS (
               UNION ALL SELECT b AS src, a AS dst FROM pairs)"""
 
 
+# ---------------------------------------------------------------------------
+# Shared statistical kernels: one Spark definition each, used by the
+# queries that differ only in what they do with it.
+# ---------------------------------------------------------------------------
+
+
+def price_normal_eq(spark: SparkSession, sf_dir: str, ridge: int = 0) -> DataFrame:
+    """extendedprice_cents ~ quantity + discount_pct by the normal
+    equations → (n, beta0, beta_q, beta_d), solved by Cramer's rule on
+    the 3x3 moment matrix. ``ridge`` adds λ to the two slope diagonal
+    moments (the intercept stays unpenalized).
+
+    The distributed part is ONE map-combined aggregate of nine integer
+    moments (inputs quantized to integer cents/percent, sums
+    BIGINT-exact at any SF — the largest, Σq·y, is ~3e15 at sf1, under
+    2^53 and int64); the solve is scalar arithmetic on that one row.
+    Both engines convert the identical BIGINT moments to double (exact)
+    and evaluate the SAME Cramer expression tree left-to-right in
+    IEEE-754 — bit-identical determinants, then a 6dp round."""
+    li = _t(spark, sf_dir, "lineitem")
+    q = F.round(F.col("l_quantity")).cast("long")
+    d = F.round(F.col("l_discount") * 100).cast("long")
+    y = F.round(F.col("l_extendedprice") * 100).cast("long")
+    sqq, sdd = F.sum(q * q), F.sum(d * d)
+    if ridge:
+        sqq, sdd = sqq + F.lit(ridge), sdd + F.lit(ridge)
+    m = li.agg(
+        F.count("*").alias("n"),
+        F.sum(q).alias("sq"),
+        F.sum(d).alias("sd"),
+        sqq.alias("sqq"),
+        F.sum(q * d).alias("sqd"),
+        sdd.alias("sdd"),
+        F.sum(y).alias("sy"),
+        F.sum(q * y).alias("sqy"),
+        F.sum(d * y).alias("sdy"),
+    )
+    a = F.col("n").cast("double")
+    b = F.col("sq").cast("double")
+    c = F.col("sd").cast("double")
+    e = F.col("sqq").cast("double")
+    g = F.col("sqd").cast("double")
+    i = F.col("sdd").cast("double")
+    v0 = F.col("sy").cast("double")
+    v1 = F.col("sqy").cast("double")
+    v2 = F.col("sdy").cast("double")
+    det = a * (e * i - g * g) - b * (b * i - g * c) + c * (b * g - e * c)
+    det0 = v0 * (e * i - g * g) - b * (v1 * i - g * v2) + c * (v1 * g - e * v2)
+    det1 = a * (v1 * i - g * v2) - v0 * (b * i - g * c) + c * (b * v2 - v1 * c)
+    det2 = a * (e * v2 - v1 * g) - b * (b * v2 - v1 * c) + v0 * (b * g - e * c)
+    return m.select(
+        "n",
+        F.round(det0 / det, 6).alias("beta0"),
+        F.round(det1 / det, 6).alias("beta_q"),
+        F.round(det2 / det, 6).alias("beta_d"),
+    )
+
+
+def lifetime_risk_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Right-censored customer-lifetime risk table at event times →
+    (t, d, at_risk). A subject's lifetime t is the months between its
+    first and last order; it is censored (not an event) when it still
+    ordered within 3 months of the corpus horizon. ``at_risk`` is every
+    subject minus those whose lifetime ended before t (one prefix-sum
+    window over the |lifetimes|-row table). Subject reduction is one
+    custkey hash agg; everything after it is post-agg scale."""
+    orders = _t(spark, sf_dir, "orders")
+    mi = F.year(F.col("o_orderdate").cast("date")) * 12 + F.month(
+        F.col("o_orderdate").cast("date")
+    )
+    span = orders.groupBy("o_custkey").agg(
+        F.min(mi).alias("m0"), F.max(mi).alias("m1")
+    )
+    horizon = span.agg(F.max("m1").alias("mh"))
+    subj = span.crossJoin(F.broadcast(horizon)).select(
+        (F.col("m1") - F.col("m0")).cast("long").alias("t"),
+        (F.col("m1") < F.col("mh") - 3).alias("observed"),
+    )
+    risk = subj.groupBy("t").agg(
+        F.sum(F.col("observed").cast("long")).cast("long").alias("d"),
+        F.count("*").cast("long").alias("ct"),
+    )
+    tot = subj.agg(F.count("*").cast("long").alias("n"))
+    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
+    tbl = risk.crossJoin(F.broadcast(tot)).select(
+        "t",
+        "d",
+        (F.col("n") - F.coalesce(F.sum("ct").over(w_prev), F.lit(0))).alias(
+            "at_risk"
+        ),
+    )
+    return tbl.filter(F.col("d") > 0)
+
+
 # Hard ceiling for the two deliberately-uncapped lossless similarity
 # self-joins (dd_jaccard_prefix_join, dd_edit_distance_join). They are
 # oracle twins whose OUTPUT is expected-quadratic on duplicate-dense

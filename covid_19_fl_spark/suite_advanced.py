@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators import ranks
+from .operators import graph, ranks
 from .suite import _t, parts_edges, parts_edges_sql, query
 
 
@@ -1919,46 +1919,9 @@ def x_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partkey % 97 = 0), reported as a distance histogram (-1 =
     unreached within 3 hops). Completes the graph family —
     connectivity (dd_dup_clusters), centrality (x_pagerank), closure
-    (x_triangle_count) — with reachability.
-
-    Scale shape: each round is one join of the current frontier-
-    inclusive distance table against the adjacency list (both keyed on
-    the vertex — co-partitioned shuffles) followed by a min-combine
-    hash agg; distances are small integers, so every round is exact,
-    and the bounded round count makes the oracle a finite CTE unroll
-    (PageRank's recipe — BFS's min-plus semiring instead of rank
-    sums). At 100 TB the adjacency list is the thing to pre-bucket by
-    u so the per-round join never re-shuffles the graph.
+    (x_triangle_count) — with reachability. Rounds, scale shape and
+    exactness: :func:`operators.graph.min_plus_histogram` (weight 1).
     """
-    e0 = parts_edges(spark, sf_dir)
-    adj = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()
-    nodes = adj.select(F.col("u").alias("node")).distinct()
-    dist = nodes.filter(F.col("node") % 97 == 0).select(
-        "node", F.lit(0).cast("long").alias("dist")
-    )
-    for _ in range(3):
-        # The distance table is bounded by |nodes| ≪ |edges|: broadcast
-        # it so the adjacency list never crosses an exchange — the only
-        # shuffle per round is the min-combine agg. (At 100 TB with a
-        # frontier too big to broadcast, drop the hint and pre-bucket
-        # adj by u instead — the join key layout is already right.)
-        frontier = (
-            F.broadcast(dist).join(adj, dist["node"] == adj["u"])
-            .select(F.col("v").alias("node"), (F.col("dist") + 1).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(frontier)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            # dist appears twice per round (itself + the frontier join);
-            # without truncation the relaxation lineage doubles each
-            # round and the e0 self-join replays 2^rounds times.
-            .localCheckpoint(eager=False)
-        )
-    return (
-        nodes.join(dist, "node", "left")
-        .groupBy(F.coalesce(F.col("dist"), F.lit(-1)).alias("dist"))
-        .agg(F.count("*").alias("n_nodes"))
+    return graph.min_plus_histogram(
+        parts_edges(spark, sf_dir), F.col("node") % 97 == 0, 3, F.lit(1)
     )

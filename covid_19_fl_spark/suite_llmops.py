@@ -1784,7 +1784,7 @@ def _kmeans_oracle(rounds: int = 2) -> str:
     possible because every per-round quantity is engine-deterministic
     (clustering.py's integer centroids + rounded left-fold distances),
     the same unrolling recipe as x_pagerank's rank rounds."""
-    Q = int(clustering.CENTROID_Q)
+    Q = int(similarity.CENTROID_Q)
 
     def cent_ctes(tag: str, src: str, label_expr: str) -> str:
         return f"""

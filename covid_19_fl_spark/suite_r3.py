@@ -17,7 +17,7 @@ from . import tables
 from .llmops import dedup, similarity, text
 from .operators import bloom, ranks
 from .suite import ORACLES as _ORACLES
-from .suite import _t, parts_edges, parts_edges_sql, query
+from .suite import _t, lifetime_risk_table, parts_edges, parts_edges_sql, query
 
 # ---------------------------------------------------------------------------
 # Benchmark contamination audit (decontamination pass)
@@ -2168,36 +2168,9 @@ def x_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     product-limit estimator Π(1 − dᵢ/nᵢ) is a PREFIX PRODUCT over
     event times — computed as an ordered left fold over the collected
     factor series (Holt's recipe with × instead of +), bit-identical
-    to the oracle's windowed list_reduce; at-risk counts come from one
-    prefix-sum window over the |lifetimes|-row table. Subject
-    reduction is one custkey hash agg; everything downstream is
-    post-agg scale."""
-    orders = _t(spark, sf_dir, "orders")
-    mi = F.year(F.col("o_orderdate").cast("date")) * 12 + F.month(
-        F.col("o_orderdate").cast("date")
-    )
-    span = orders.groupBy("o_custkey").agg(
-        F.min(mi).alias("m0"), F.max(mi).alias("m1")
-    )
-    horizon = span.agg(F.max("m1").alias("mh"))
-    subj = span.crossJoin(F.broadcast(horizon)).select(
-        (F.col("m1") - F.col("m0")).cast("long").alias("t"),
-        (F.col("m1") < F.col("mh") - 3).alias("observed"),
-    )
-    risk = subj.groupBy("t").agg(
-        F.sum(F.col("observed").cast("long")).cast("long").alias("d"),
-        F.count("*").cast("long").alias("ct"),
-    )
-    tot = subj.agg(F.count("*").cast("long").alias("n"))
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    tbl = risk.crossJoin(F.broadcast(tot)).select(
-        "t",
-        "d",
-        (F.col("n") - F.coalesce(F.sum("ct").over(w_prev), F.lit(0))).alias(
-            "at_risk"
-        ),
-    )
-    factors = tbl.filter(F.col("d") > 0).select(
+    to the oracle's windowed list_reduce. Risk table:
+    :func:`suite.lifetime_risk_table`."""
+    factors = lifetime_risk_table(spark, sf_dir).select(
         "t",
         "d",
         "at_risk",

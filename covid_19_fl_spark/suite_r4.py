@@ -18,7 +18,6 @@ accumulation across shuffles, doubles only in final rounded ratios.
 
 from __future__ import annotations
 
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,7 +27,7 @@ from . import tables
 from .confs import scoped_conf
 from .llmops import similarity
 from .streaming import stateful
-from .suite import _t, query
+from .suite import _t, price_normal_eq, query
 
 # CUSUM parameters (micro-units are applied inside cusum_monitor):
 # target/slack/threshold chosen against the events.value domain
@@ -177,11 +176,9 @@ def _drain_to_parquet(
     self-cleans and /tmp never accumulates across bench passes.
     Returns (DataFrame over the drained rows, data-batch count) so
     callers keep their single-batch exactness assertions."""
-    import re as _re
     import shutil as _sh
 
-    tag = _re.sub(r"[^0-9A-Za-z]+", "_", os.path.basename(os.path.normpath(sf_dir)))
-    dest = f"/tmp/covid_19_fl_spark-drain/{name}_{tag}"
+    dest = f"/tmp/covid_19_fl_spark-drain/{name}_{tables.corpus_tag(sf_dir)}"
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         if batch_id == 0:
@@ -496,55 +493,13 @@ def x_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ml_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-feature OLS by normal equations: extendedprice_cents ~
     quantity + discount_pct, solved exactly via Cramer's rule on the
-    3x3 moment matrix. The distributed part is ONE map-combined
-    aggregate of nine integer moments (all inputs quantized to
-    integer cents/percent, sums BIGINT-exact at any SF — the largest,
-    Σq·y, is ~3e15 at sf1, well under 2^53 and int64); the solve is
-    scalar arithmetic on that single row. This is the textbook
-    "sufficient statistics" pattern: at 100 TB the model fit costs one
-    scan + one 9-number reduce, no iteration, no driver loop —
-    contrast ml_logreg_gd's per-epoch passes.
-
-    Exactness: both engines convert the identical BIGINT moments to
-    double (exact, < 2^53) and evaluate the SAME Cramer expression
-    tree left-to-right in IEEE-754 — bit-identical determinants, then
-    a 6dp round. Coefficient units: cents per unit quantity / per
-    discount point.
+    3x3 moment matrix (:func:`suite.price_normal_eq`). This is the
+    textbook "sufficient statistics" pattern: at 100 TB the model fit
+    costs one scan + one 9-number reduce, no iteration, no driver loop
+    — contrast ml_logreg_gd's per-epoch passes. Coefficient units:
+    cents per unit quantity / per discount point.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    q = F.round(F.col("l_quantity")).cast("long")
-    d = F.round(F.col("l_discount") * 100).cast("long")
-    y = F.round(F.col("l_extendedprice") * 100).cast("long")
-    m = li.agg(
-        F.count("*").alias("n"),
-        F.sum(q).alias("sq"),
-        F.sum(d).alias("sd"),
-        F.sum(q * q).alias("sqq"),
-        F.sum(q * d).alias("sqd"),
-        F.sum(d * d).alias("sdd"),
-        F.sum(y).alias("sy"),
-        F.sum(q * y).alias("sqy"),
-        F.sum(d * y).alias("sdy"),
-    )
-    a = F.col("n").cast("double")
-    b = F.col("sq").cast("double")
-    c = F.col("sd").cast("double")
-    e = F.col("sqq").cast("double")
-    g = F.col("sqd").cast("double")
-    i = F.col("sdd").cast("double")
-    v0 = F.col("sy").cast("double")
-    v1 = F.col("sqy").cast("double")
-    v2 = F.col("sdy").cast("double")
-    det = a * (e * i - g * g) - b * (b * i - g * c) + c * (b * g - e * c)
-    det0 = v0 * (e * i - g * g) - b * (v1 * i - g * v2) + c * (v1 * g - e * v2)
-    det1 = a * (v1 * i - g * v2) - v0 * (b * i - g * c) + c * (b * v2 - v1 * c)
-    det2 = a * (e * v2 - v1 * g) - b * (b * v2 - v1 * c) + v0 * (b * g - e * c)
-    return m.select(
-        "n",
-        F.round(det0 / det, 6).alias("beta0"),
-        F.round(det1 / det, 6).alias("beta_q"),
-        F.round(det2 / det, 6).alias("beta_d"),
-    )
+    return price_normal_eq(spark, sf_dir)
 
 
 def _exact_substr_oracle(k: int = 8, min_docs: int = 2) -> str:

@@ -26,11 +26,18 @@ accumulation across shuffles, doubles only in final rounded ratios.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import tables
-from .suite import _t, parts_edges, parts_edges_sql, query
+from .suite import (
+    _t,
+    lifetime_risk_table,
+    parts_edges,
+    parts_edges_sql,
+    price_normal_eq,
+    query,
+)
 from .suite_r4 import _data_batches, _drain_to_memory, _drain_to_parquet
 
 # Event-time band for the watermarked join: a lineitem matches its
@@ -241,53 +248,18 @@ _RIDGE_LAMBDA = 10_000_000
     """,
 )
 def ml_ridge_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ridge (L2-regularized) regression by the same sufficient-
-    statistics pattern as ml_ols_normal_eq: extendedprice_cents ~
+    """Ridge (L2-regularized) regression: extendedprice_cents ~
     quantity + discount_pct with penalty λ on the two slope
     coefficients (the intercept is unpenalized — the standard
     formulation). The normal matrix gains λ on its two feature
     diagonal entries; since the moments are BIGINT-exact and λ is an
     integer constant, the regularized matrix is STILL integer-exact,
-    and both engines run the identical Cramer expression tree on
-    identical doubles — bit-for-bit, like the OLS twin. One scan +
-    one 9-number reduce at any scale; regularization costs nothing
-    distributed-ly, which is exactly why ridge is the default
-    large-scale linear baseline.
+    so the Cramer solve (:func:`suite.price_normal_eq`) stays
+    bit-for-bit. One scan + one 9-number reduce at any scale;
+    regularization costs nothing distributed-ly, which is exactly why
+    ridge is the default large-scale linear baseline.
     """
-    li = _t(spark, sf_dir, "lineitem")
-    q = F.round(F.col("l_quantity")).cast("long")
-    d = F.round(F.col("l_discount") * 100).cast("long")
-    y = F.round(F.col("l_extendedprice") * 100).cast("long")
-    m = li.agg(
-        F.count("*").alias("n"),
-        F.sum(q).alias("sq"),
-        F.sum(d).alias("sd"),
-        (F.sum(q * q) + F.lit(_RIDGE_LAMBDA)).alias("sqq"),
-        F.sum(q * d).alias("sqd"),
-        (F.sum(d * d) + F.lit(_RIDGE_LAMBDA)).alias("sdd"),
-        F.sum(y).alias("sy"),
-        F.sum(q * y).alias("sqy"),
-        F.sum(d * y).alias("sdy"),
-    )
-    a = F.col("n").cast("double")
-    b = F.col("sq").cast("double")
-    c = F.col("sd").cast("double")
-    e = F.col("sqq").cast("double")
-    g = F.col("sqd").cast("double")
-    i = F.col("sdd").cast("double")
-    v0 = F.col("sy").cast("double")
-    v1 = F.col("sqy").cast("double")
-    v2 = F.col("sdy").cast("double")
-    det = a * (e * i - g * g) - b * (b * i - g * c) + c * (b * g - e * c)
-    det0 = v0 * (e * i - g * g) - b * (v1 * i - g * v2) + c * (v1 * g - e * v2)
-    det1 = a * (v1 * i - g * v2) - v0 * (b * i - g * c) + c * (b * v2 - v1 * c)
-    det2 = a * (e * v2 - v1 * g) - b * (b * v2 - v1 * c) + v0 * (b * g - e * c)
-    return m.select(
-        "n",
-        F.round(det0 / det, 6).alias("beta0"),
-        F.round(det1 / det, 6).alias("beta_q"),
-        F.round(det2 / det, 6).alias("beta_d"),
-    )
+    return price_normal_eq(spark, sf_dir, ridge=_RIDGE_LAMBDA)
 
 
 @query(
@@ -345,43 +317,15 @@ def ml_ridge_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nelson-Aalen cumulative-hazard estimator over the same
-    right-censored customer-lifetime construction as x_kaplan_meier
-    (its additive dual: H(t) = Σ dᵢ/nᵢ instead of the product-limit
-    survival), plus the standard Poisson variance Σ dᵢ/nᵢ². Both
-    running sums are ordered left folds over the event-time factor
-    series — Spark ``aggregate`` ≡ DuckDB windowed ``list_reduce``
-    bit-for-bit (the suite's exactness workhorse; a float SUM() OVER
-    would be summation-order-unspecified). Subject reduction is one
-    custkey hash agg; everything after is domain-bounded post-agg."""
-    orders = _t(spark, sf_dir, "orders")
-    mi = F.year(F.col("o_orderdate").cast("date")) * 12 + F.month(
-        F.col("o_orderdate").cast("date")
-    )
-    span = orders.groupBy("o_custkey").agg(
-        F.min(mi).alias("m0"), F.max(mi).alias("m1")
-    )
-    horizon = span.agg(F.max("m1").alias("mh"))
-    subj = span.crossJoin(F.broadcast(horizon)).select(
-        (F.col("m1") - F.col("m0")).cast("long").alias("t"),
-        (F.col("m1") < F.col("mh") - 3).alias("observed"),
-    )
-    risk = subj.groupBy("t").agg(
-        F.sum(F.col("observed").cast("long")).cast("long").alias("d"),
-        F.count("*").cast("long").alias("ct"),
-    )
-    tot = subj.agg(F.count("*").cast("long").alias("n"))
-    from pyspark.sql import Window
-
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    tbl = risk.crossJoin(F.broadcast(tot)).select(
-        "t",
-        "d",
-        (F.col("n") - F.coalesce(F.sum("ct").over(w_prev), F.lit(0))).alias(
-            "at_risk"
-        ),
-    )
-    terms = tbl.filter(F.col("d") > 0).select(
+    """Nelson-Aalen cumulative-hazard estimator over the right-censored
+    customer lifetimes (:func:`suite.lifetime_risk_table`) — the
+    additive dual of x_kaplan_meier: H(t) = Σ dᵢ/nᵢ instead of the
+    product-limit survival, plus the standard Poisson variance
+    Σ dᵢ/nᵢ². Both running sums are ordered left folds over the
+    event-time factor series — Spark ``aggregate`` ≡ DuckDB windowed
+    ``list_reduce`` bit-for-bit (a float SUM() OVER would be
+    summation-order-unspecified)."""
+    terms = lifetime_risk_table(spark, sf_dir).select(
         "t",
         "d",
         "at_risk",

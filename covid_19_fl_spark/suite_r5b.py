@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .llmops.dedup import PORTABLE_PRIME, portable_hash
+from .operators import graph
 from .suite import _t, parts_edges, parts_edges_sql, query
 
 # ---------------------------------------------------------------------------
@@ -756,49 +757,14 @@ def x_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts graph, edge weights the deterministic integers
     1 + (u+v) % 5, sources partkey % 89 = 0. Output is the
     shortest-distance histogram (-1 = unreached in 4 relaxation
-    rounds). The weighted twin of ``x_bfs_distances`` — hop counts
-    become additive costs, covering routing/latency-style graph
-    queries the unit-weight BFS cannot express.
-
-    Exactness: distances are small-integer sums of integer weights —
-    every round is exact on both engines, and the bounded round count
-    makes the oracle a finite CTE unroll.
-
-    Scale shape: per round one join of the distance table against the
-    adjacency list plus a min-combine hash agg, both keyed on the
-    vertex. The distance table is node-bounded, so it broadcasts; at
-    a scale where the frontier outgrows broadcast, drop the hint —
-    the equi-join layout already co-partitions. ``localCheckpoint``
-    truncates the doubling relaxation lineage each round (the
-    iterative-loop discipline every bounded-round plan here uses).
+    rounds). Hop counts become additive costs, covering
+    routing/latency-style graph queries the unit-weight BFS
+    (``x_bfs_distances``) cannot express. Rounds, scale shape and
+    exactness: :func:`operators.graph.min_plus_histogram`.
     """
-    e0 = parts_edges(spark, sf_dir).withColumn(
+    edges = parts_edges(spark, sf_dir).withColumn(
         "w", 1 + (F.col("u") + F.col("v")) % 5
     )
-    adj = e0.unionByName(
-        e0.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    ).cache()
-    nodes = adj.select(F.col("u").alias("node")).distinct()
-    dist = nodes.filter(F.col("node") % 89 == 0).select(
-        "node", F.lit(0).cast("long").alias("dist")
-    )
-    for _ in range(_SSSP_ROUNDS):
-        frontier = (
-            F.broadcast(dist)
-            .join(adj, dist["node"] == adj["u"])
-            .select(
-                F.col("v").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(frontier)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-    return (
-        nodes.join(dist, "node", "left")
-        .groupBy(F.coalesce(F.col("dist"), F.lit(-1)).alias("dist"))
-        .agg(F.count("*").alias("n_nodes"))
+    return graph.min_plus_histogram(
+        edges, F.col("node") % 89 == 0, _SSSP_ROUNDS, F.col("w")
     )

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .llmops import clustering
+from .llmops import clustering, similarity
 from .llmops import text as T
 from .operators import ranks
 from .suite import _t, parts_edges, query
@@ -384,7 +384,7 @@ def _silhouette_oracle(rounds: int = 2) -> str:
     """Unrolled-CTE DuckDB replica of the deterministic Lloyd rounds
     (ml_kmeans_clusters' recipe) extended with the FINAL centroid
     update and the per-point centroid-silhouette rollup."""
-    Q = int(clustering.CENTROID_Q)
+    Q = int(similarity.CENTROID_Q)
 
     def cent_ctes(tag: str, src: str, label_expr: str) -> str:
         return f"""
@@ -482,7 +482,7 @@ def ml_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = clustering.kmeans_lloyd(emb, rounds=2).join(
         emb.select("vec_id", "embedding"), "vec_id"
     )
-    cents = clustering._centroids(assigned, "embedding")
+    cents = similarity.label_centroids(assigned, "cluster_id")
     scored = (
         assigned.select(
             "vec_id", F.col("cluster_id").alias("own"), "embedding"

@@ -30,11 +30,10 @@ JPEG behind the optional PIL gate).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import tables
 from .llmops import multimodal
 from .suite import _t, query
 
@@ -47,39 +46,22 @@ _B = (
 
 
 def _png_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per sf corpus) the generative PNG fixture
-    files for the binaryFile-scan query and return the directory.
-
-    Idempotent: a `_READY` marker carrying a CONTENT signature of the
-    source documents table (file sizes+mtimes, tables.content_sig —
-    round-8 advice) skips regeneration on repeat calls (bench warm
-    passes) with NO Spark job on the warm path, and a regenerated
-    corpus at the same path — even with the same row count — gets
-    fresh PNGs instead of a stale-fixture oracle red. The write itself
-    is distributed (foreachPartition) — no driver-side row loop; in
-    local mode every task shares /tmp, on a cluster this would be an
+    """Materialize (once per documents content signature, via
+    ``tables.derived_layout``) the generative PNG fixture files for the
+    binaryFile-scan query and return the directory. Warm calls (bench
+    passes) run no Spark job, and a regenerated corpus gets fresh PNGs
+    instead of a stale-fixture oracle red. The write itself is
+    distributed (foreachPartition) — no driver-side row loop; in local
+    mode every task shares /tmp, on a cluster this would be an
     object-store prefix with the identical write pattern."""
-    from . import tables
-
-    sig = tables.content_sig(sf_dir, "documents")
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    dest = os.path.join("/tmp", "spark_graft_media", f"{base}_{sig}", "png")
-    marker = os.path.join(dest, "_READY")
-    try:
-        with open(marker) as fh:
-            if fh.read().strip() == sig:
-                return dest
-    except OSError:
-        pass
-    # signature miss: drop superseded fixture corpora for this sf tag
-    # before materializing the fresh one (r9 advice — orphan cleanup)
-    tables.purge_stale_layouts(
-        os.path.join("/tmp", "spark_graft_media"), f"{base}_", f"{base}_{sig}"
+    return tables.derived_layout(
+        sf_dir,
+        "documents",
+        "media_png",
+        lambda dest: multimodal.materialize_png_corpus(
+            _t(spark, sf_dir, "documents"), dest
+        ),
     )
-    multimodal.materialize_png_corpus(_t(spark, sf_dir, "documents"), dest)
-    with open(marker, "w") as fh:
-        fh.write(sig)
-    return dest
 
 
 @query(

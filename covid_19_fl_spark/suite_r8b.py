@@ -29,9 +29,6 @@ pruned fraction.
 
 from __future__ import annotations
 
-import os
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,10 +36,6 @@ from . import tables
 from .suite import _t, query
 
 _BUCKETS = 8
-
-
-def _tag(sf_dir: str) -> str:
-    return re.sub(r"[^0-9A-Za-z]+", "_", os.path.basename(os.path.normpath(sf_dir)))
 
 
 def bucketed_table(
@@ -62,28 +55,26 @@ def bucketed_table(
     a regenerated corpus at the same path, gets its own layout instead
     of silently reusing the wrong one."""
     sig = tables.content_sig(sf_dir, table)
-    name = f"bkt_{table}_{key}_{n}_{_tag(sf_dir)}_{sig}"
-    if not spark.catalog.tableExists(name):
-        # A regenerated corpus produces a new signature — purge the
-        # superseded layout dirs for this (table, key, n) family so
-        # /tmp doesn't accumulate orphans across rounds (r9 advice).
-        tables.purge_stale_layouts(
-            f"/tmp/spark_graft_bucketed/{_tag(sf_dir)}",
-            f"{table}_{key}_{n}_",
-            f"{table}_{key}_{n}_{sig}",
-        )
+    name = f"bkt_{table}_{key}_{n}_{tables.corpus_tag(sf_dir)}_{sig}"
+
+    def build(dest: str) -> None:
         (
             _t(spark, sf_dir, table)
             .write.mode("overwrite")
-            .option(
-                "path",
-                f"/tmp/spark_graft_bucketed/{_tag(sf_dir)}/{table}_{key}_{n}_{sig}",
-            )
+            .option("path", dest)
             .bucketBy(n, key)
             .sortBy(key)
             .format("parquet")
             .saveAsTable(name)
         )
+
+    tables.derived_layout(
+        sf_dir,
+        table,
+        f"bucketed_{table}_{key}_{n}",
+        build,
+        built=lambda: spark.catalog.tableExists(name),
+    )
     return spark.table(name)
 
 
@@ -150,29 +141,19 @@ def x_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: partition pruning is THE first-order lever on a 100 TB
     time-series table — a day query on a year of data touches 0.3%
     of the bytes, before any row filter runs."""
-    # The re-layout is cached under /tmp keyed on a CONTENT signature
-    # of the source table (round-8 advice): a regenerated events corpus
-    # at the same path invalidates the cache instead of the query
-    # silently reading the stale layout while the oracle reads fresh.
-    sig = tables.content_sig(sf_dir, "events")
-    dest = f"/tmp/spark_graft_partitioned/{_tag(sf_dir)}/events"
-    marker = os.path.join(dest, "_SPARK_GRAFT_READY")
-    fresh = False
-    try:
-        with open(marker) as fh:
-            fresh = fh.read().strip() == sig
-    except OSError:
-        pass
-    if not fresh:
-        (
-            _t(spark, sf_dir, "events")
-            .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
-            .write.partitionBy("dt")
-            .mode("overwrite")
-            .parquet(dest)
-        )
-        with open(marker, "w") as fh:
-            fh.write(sig)
+    # The re-layout is a tables.derived_layout: built once per events
+    # content signature, so a regenerated corpus at the same path never
+    # serves the stale layout while the oracle reads the fresh table.
+    dest = tables.derived_layout(
+        sf_dir,
+        "events",
+        "partitioned_events",
+        lambda d: _t(spark, sf_dir, "events")
+        .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
+        .write.partitionBy("dt")
+        .mode("overwrite")
+        .parquet(d),
+    )
     first_day = (
         _t(spark, sf_dir, "events")
         .agg(F.date_format(F.min(F.to_date("ts")), "yyyy-MM-dd"))

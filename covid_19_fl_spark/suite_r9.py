@@ -42,8 +42,6 @@ reference has no media or streaming surface (cv.py:1-173).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,7 +50,6 @@ from .llmops import multimodal
 from .sinks.versioned import VersionedParquetTable
 from .suite import _t, query
 from .suite_r4 import _drain_to_memory
-from .suite_r8b import _tag
 
 # ---------------------------------------------------------------------------
 # x_time_travel_read — versioned-table time travel under the oracle gate
@@ -68,36 +65,28 @@ def _time_travel_table(spark: SparkSession, sf_dir: str) -> VersionedParquetTabl
     v3 = RESTORE(1) — history append-only, HEAD points at v1's
     snapshot dir without copying data.
 
-    Cached under /tmp keyed on the source table's content signature
-    (same staleness discipline as the bucketed/partitioned layouts):
-    a regenerated corpus rebuilds the history instead of serving stale
-    snapshots against a fresh oracle."""
-    import shutil
+    A ``tables.derived_layout`` of orders: a regenerated corpus
+    rebuilds the history instead of serving stale snapshots against a
+    fresh oracle."""
+    dest = tables.derived_layout(
+        sf_dir,
+        "orders",
+        "timetravel_history",
+        lambda d: _three_versions(spark, sf_dir, d),
+    )
+    return VersionedParquetTable(spark, dest)
 
-    sig = tables.content_sig(sf_dir, "orders")
-    dest = f"/tmp/spark_graft_timetravel/{_tag(sf_dir)}_{sig}"
-    marker = os.path.join(dest, "_SPARK_GRAFT_READY")
+
+def _three_versions(
+    spark: SparkSession, sf_dir: str, dest: str
+) -> VersionedParquetTable:
+    """Commit v1 (partial load), v2 (full refresh), v3 = RESTORE(1)."""
     vt = VersionedParquetTable(spark, dest)
-    fresh = False
-    try:
-        with open(marker) as fh:
-            fresh = fh.read().strip() == sig
-    except OSError:
-        pass
-    if not fresh:
-        shutil.rmtree(dest, ignore_errors=True)  # half-built leftovers
-        # and superseded-signature histories for this corpus tag
-        # (r9 advice — /tmp orphan cleanup on signature miss)
-        tables.purge_stale_layouts(
-            "/tmp/spark_graft_timetravel", f"{_tag(sf_dir)}_", f"{_tag(sf_dir)}_{sig}"
-        )
-        orders = _t(spark, sf_dir, "orders")
-        v1 = vt.commit(orders.filter(F.col("o_orderkey") % 3 != 0))
-        v2 = vt.commit(orders, op="full_refresh")
-        v3 = vt.restore(v1)
-        assert (v1, v2, v3) == (1, 2, 3)
-        with open(marker, "w") as fh:
-            fh.write(sig)
+    orders = _t(spark, sf_dir, "orders")
+    v1 = vt.commit(orders.filter(F.col("o_orderkey") % 3 != 0))
+    v2 = vt.commit(orders, op="full_refresh")
+    v3 = vt.restore(v1)
+    assert (v1, v2, v3) == (1, 2, 3)
     return vt
 
 
@@ -163,25 +152,9 @@ def _vacuumed_table(spark: SparkSession, sf_dir: str) -> VersionedParquetTable:
     per corpus content; the vacuum outcome is deterministic, so
     repeat calls (bench warm passes) just reopen the already-vacuumed
     log."""
-    import shutil
 
-    sig = tables.content_sig(sf_dir, "orders")
-    dest = f"/tmp/spark_graft_timetravel/{_tag(sf_dir)}_{sig}_vac"
-    marker = os.path.join(dest, "_SPARK_GRAFT_READY")
-    vt = VersionedParquetTable(spark, dest)
-    fresh = False
-    try:
-        with open(marker) as fh:
-            fresh = fh.read().strip() == sig
-    except OSError:
-        pass
-    if not fresh:
-        shutil.rmtree(dest, ignore_errors=True)
-        orders = _t(spark, sf_dir, "orders")
-        vt.commit(orders.filter(F.col("o_orderkey") % 3 != 0))
-        vt.commit(orders, op="full_refresh")
-        vt.restore(1)
-        removed = vt.vacuum(keep_last=1)
+    def build(dest: str) -> None:
+        removed = _three_versions(spark, sf_dir, dest).vacuum(keep_last=1)
         # v2's snapshot dir is the ONLY reclaimable one: v1's dir is
         # still referenced by HEAD (the restore) and must survive.
         if len(removed) != 1:
@@ -189,9 +162,9 @@ def _vacuumed_table(spark: SparkSession, sf_dir: str) -> VersionedParquetTable:
                 f"vacuum(keep_last=1) removed {removed!r}; expected "
                 "exactly the unreferenced v2 snapshot dir"
             )
-        with open(marker, "w") as fh:
-            fh.write(sig)
-    return vt
+
+    dest = tables.derived_layout(sf_dir, "orders", "timetravel_vacuumed", build)
+    return VersionedParquetTable(spark, dest)
 
 
 @query(

@@ -17,6 +17,8 @@ Spark job (~80 ms); with an explicit schema a load runs none.
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -225,12 +227,8 @@ def content_sig(sf_dir: str, name: str) -> str:
     ``sf_dir/name.parquet`` — no Spark job, just filesystem stats.
 
     Keys the in-process read-schema cache (``_read_schema``), so a
-    corpus regenerated at the same path is re-inferred. Also keys
-    /tmp-cached derived layouts (bucketed tables, partition re-layouts,
-    media fixture corpora) so a REGENERATED corpus at the same path
-    invalidates the cache instead of silently serving the stale layout
-    while the DuckDB oracle reads the fresh table (round-8 advice items
-    on suite_r8/suite_r8b)."""
+    corpus regenerated at the same path is re-inferred. Also keys the
+    /tmp layouts derived from the table (``derived_layout``)."""
     import hashlib
 
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -250,26 +248,60 @@ def content_sig(sf_dir: str, name: str) -> str:
     return h[:12]
 
 
-def purge_stale_layouts(parent: str, prefix: str, keep: str) -> None:
-    """Remove signature-keyed cached layouts superseded by ``keep``.
+# Parent of the derived layouts (bucketed tables, partition re-layouts,
+# media fixtures, time-travel histories).
+LAYOUT_ROOT = "/tmp/spark_graft_layouts"
 
-    The /tmp caches keyed on ``content_sig`` (bucketed tables, media
-    fixture corpora, time-travel histories) embed the signature in the
-    directory name — correct for staleness, but a regenerated corpus
-    orphans the prior-signature dir forever (round-9 advice). On a
-    signature miss, callers purge every sibling ``prefix*`` dir under
-    ``parent`` except the one being (re)built. No-op when the parent
-    doesn't exist; never touches dirs outside the given prefix family.
-    """
+
+def corpus_tag(sf_dir: str) -> str:
+    """Filesystem-safe name of a corpus directory (its basename), for
+    the /tmp paths derived from it."""
+    base = os.path.basename(os.path.normpath(sf_dir))
+    return re.sub(r"[^0-9A-Za-z]+", "_", base) or "sf"
+
+
+def derived_layout(
+    sf_dir: str,
+    table: str,
+    family: str,
+    build: Callable[[str], None],
+    built: Callable[[], bool] | None = None,
+) -> str:
+    """Directory of a layout derived from corpus table ``table``,
+    built by ``build(dest)`` once per content signature.
+
+    ``dest`` is ``LAYOUT_ROOT/<corpus tag>/<family>/<content_sig>``:
+    a regenerated corpus at the same path gets a fresh layout instead
+    of the stale one while the DuckDB oracle reads the fresh table. A
+    ``_READY`` marker holding the signature, written after the build,
+    makes the warm path run no Spark job; ``built()`` replaces that
+    check for a layout whose readiness lives elsewhere (a catalog
+    table), and then no marker is written. On a miss the family's
+    directory is emptied first — superseded signatures and half-built
+    leftovers — so /tmp does not accumulate orphans, and no other
+    family's layout is touched."""
     import shutil
 
-    try:
-        siblings = os.listdir(parent)
-    except OSError:
-        return
-    for d in siblings:
-        if d.startswith(prefix) and d != keep:
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    sig = content_sig(sf_dir, table)
+    home = os.path.join(LAYOUT_ROOT, corpus_tag(sf_dir), family)
+    dest = os.path.join(home, sig)
+    marker = os.path.join(dest, "_READY")
+    if built is not None:
+        if built():
+            return dest
+    else:
+        try:
+            with open(marker) as fh:
+                if fh.read().strip() == sig:
+                    return dest
+        except OSError:
+            pass
+    shutil.rmtree(home, ignore_errors=True)
+    build(dest)
+    if built is None:
+        with open(marker, "w") as fh:
+            fh.write(sig)
+    return dest
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

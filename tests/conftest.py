@@ -10,7 +10,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("covid_19_fl_spark-tests", cpus="8")
+    spark = get_spark("covid_19_fl_spark-tests")
     yield spark
 
 
@@ -20,28 +20,46 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
-def suite_run_report(spark):
-    """ONE pass over every registered query at SF_SMOKE: build the
-    frame, capture the executed-plan string (batch queries only —
-    streaming queries execute on construction), run the count. Both
-    whole-suite lints (every-query-runs, no-cartesian-products)
-    consume this report instead of each paying their own full pass —
-    the two passes cost 197 s + 215 s of the round-10 pytest wall
-    (VERDICT r10 ask #4: the suite must fit the driver's verify
-    window)."""
-    from covid_19_fl_spark import suite as _suite
+def query_run(spark):
+    """``query_run(name)`` runs one registered query at SF_SMOKE, at
+    most once per session, and returns its record:
 
-    report = {}
-    for name, fn in _suite.QUERIES.items():
-        rec = {"error": None, "plan": "", "count": None}
+    - ``error``: why the Spark side failed to build or run, else None;
+    - ``mismatch``: why it differs from its DuckDB oracle, else None;
+    - ``plan``: the executed-plan string, captured before the oracle
+      compare (empty for ``st_*`` queries, which execute on
+      construction);
+    - ``count``: the number of result rows.
+
+    The oracle test and the whole-suite lints (every-query-runs,
+    no-cartesian-products) all read this memo, so the registry runs
+    once per session instead of once per consumer, and running one
+    oracle test id runs only that query."""
+    import duckdb
+
+    from covid_19_fl_spark import suite
+
+    from .oracle import compare
+
+    memo: dict[str, dict] = {}
+
+    def run(name: str) -> dict:
+        if name in memo:
+            return memo[name]
+        rec = memo[name] = {"error": None, "mismatch": None, "plan": "", "count": None}
         try:
-            df = fn(spark, SF_SMOKE)
+            df = suite.QUERIES[name](spark, SF_SMOKE)
             if not name.startswith("st_"):
-                rec["plan"] = (
-                    df._jdf.queryExecution().executedPlan().toString()
-                )
-            rec["count"] = df.count()
-        except Exception as exc:  # noqa: BLE001 — surfaced by the lints
+                rec["plan"] = df._jdf.queryExecution().executedPlan().toString()
+            oracle = suite.ORACLES.get(name)
+            if oracle is None:
+                rec["count"] = df.count()
+            else:
+                rec["count"] = compare(df, oracle, SF_SMOKE)
+        except (AssertionError, duckdb.Error) as exc:
+            rec["mismatch"] = f"{type(exc).__name__}: {exc}"
+        except Exception as exc:  # noqa: BLE001 — surfaced by the tests
             rec["error"] = f"{type(exc).__name__}: {exc}"
-        report[name] = rec
-    return report
+        return rec
+
+    return run

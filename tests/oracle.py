@@ -61,7 +61,7 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, float_tol: float = 0.0):
     sides (``rel.df()`` / ``toPandas``) — the path a driver-side value
     hash takes, where DuckDB HUGEINT becomes float64, lists become
     numpy arrays, etc. A query can pass (1) and still hash-mismatch on
-    the driver; (2) catches that class locally.
+    the driver; (2) catches that class locally. Returns the row count.
     """
     s_cols = spark_df.columns
     s_rows = [tuple(r) for r in spark_df.collect()]
@@ -83,6 +83,7 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, float_tol: float = 0.0):
     assert not mismatches, f"value mismatches (spark vs duckdb): {mismatches}"
 
     _compare_pandas_path(spark_df, oracle_sql, sf_dir, float_tol)
+    return len(s_rows)
 
 
 def _pd_norm_cell(v):

@@ -203,7 +203,7 @@ def test_morton_interleave_boundaries():
     from covid_19_fl_spark.session import get_spark
     from covid_19_fl_spark.suite_r8b import _morton16
 
-    spark = get_spark("covid_19_fl_spark-tests", cpus="8")
+    spark = get_spark("covid_19_fl_spark-tests")
     df = spark.createDataFrame(
         [(0, 0), (255, 0), (0, 255), (255, 255), (170, 85)],
         "xb long, yb long",

@@ -1,15 +1,16 @@
-"""The repo-root entry points: the oracle gate CLI and bench.py's
-scale-factor parse."""
+"""The repo-root entry points: the oracle gate CLI, bench.py's
+scale-factor parse and the generated INVENTORY.md."""
 
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
 import bench
 from tests.conftest import SF_SMOKE
-from tools import gate_check
+from tools import gate_check, inventory
 
 
 @pytest.mark.parametrize(
@@ -39,3 +40,10 @@ def test_gate_check_refuses_a_selection_of_no_queries():
     # A mistyped prefix must not read as a green gate over zero queries.
     with pytest.raises(SystemExit, match="no_such_query_"):
         gate_check.main([SF_SMOKE, "no_such_query_"])
+
+
+def test_inventory_is_current():
+    """INVENTORY.md is what tools/inventory.py renders for the registry
+    as it stands; regenerate it with ``python tools/inventory.py``."""
+    with open(os.path.join(inventory.REPO, "INVENTORY.md"), encoding="utf-8") as f:
+        assert f.read() == inventory.render()

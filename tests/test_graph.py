@@ -104,6 +104,24 @@ _ONE_DEFINITION = {
         ("suite.py", "TRADE_EDGES_SQL"),
     },
     r'writeStream\.format\("memory"\)': {("suite_r4.py", "_drain_to_memory")},
+    # engine kernels: one spelling each
+    # exact brute-force top-k: the local pass's output schema
+    r'"query_id long, neighbor_id long, ': {("llmops/similarity.py", "_exact_topk")},
+    # union-find path compression
+    r"parent\[x\], x = root, parent\[x\]": {("llmops/dedup.py", "min_root_labels")},
+    # min-plus relaxation: the broadcast distance table joins the adjacency
+    r"F\.broadcast\(dist\)": {("operators/graph.py", "min_plus_histogram")},
+    # normal equations: the Cramer determinant, Spark spelling
+    r"det = a \* \(e \* i - g \* g\)": {("suite.py", "price_normal_eq")},
+    # per-label centroids: the quantize step
+    r"\* F\.lit\(CENTROID_Q\)\)": {("llmops/similarity.py", "label_centroids")},
+    # IVF routing: the centroid rank
+    r'F\.col\("cdist"\)\.desc\(\)': {("llmops/similarity.py", "_ivf_route")},
+    # censored risk table: subjects whose lifetime ended before t
+    r"w_prev = Window\.orderBy\(\"t\"\)": {("suite.py", "lifetime_risk_table")},
+    # derived /tmp layouts: the marker and the corpus tag
+    r'_READY"': {("tables.py", "derived_layout")},
+    r"\[\^0-9A-Za-z\]\+": {("tables.py", "corpus_tag")},
 }
 
 
@@ -122,9 +140,10 @@ def _top_level_owner(tree: ast.Module, lineno: int) -> str | None:
 
 
 def test_shared_query_blocks_have_one_definition():
-    """The parts graph, the trading graph and the memory-sink drain
-    may be spelled ONLY inside their helpers — every query must call
-    the helper, so no hand-copied variant can drift from it."""
+    """The parts graph, the trading graph, the memory-sink drain and
+    each shared engine kernel may be spelled ONLY inside their helpers
+    — every caller must call the helper, so no hand-copied variant can
+    drift from it."""
     found = {pat: set() for pat in _ONE_DEFINITION}
     for root, _dirs, files in os.walk(PKG):
         for fn in files:

@@ -268,6 +268,23 @@ def test_ivf_index_persisted_matches_inline_and_prunes(spark, tmp_path, sf_dir):
     assert ".collect()" not in src, "ivf_topk_indexed must not collect"
 
 
+def test_ivf_index_probes_any_label_column(spark, tmp_path, sf_dir):
+    """An index built with a non-default ``label_col`` probes like the
+    inline ivf_topk over the same labels."""
+    from covid_19_fl_spark.llmops import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumnRenamed(
+        "label", "topic"
+    )
+    path = str(tmp_path / "ivf")
+    similarity.build_ivf_index(emb, path, label_col="topic")
+    qids = [0, 1, 2, 3]
+    inline = similarity.ivf_topk(emb, qids, k=5, label_col="topic").collect()
+    indexed = similarity.ivf_topk_indexed(spark, path, qids, k=5).collect()
+    assert inline
+    assert sorted(map(tuple, indexed)) == sorted(map(tuple, inline))
+
+
 def test_inverted_index_semantics(spark):
     from covid_19_fl_spark.llmops import text
 

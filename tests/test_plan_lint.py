@@ -10,16 +10,14 @@ from __future__ import annotations
 
 from covid_19_fl_spark import suite
 
-from .conftest import SF_SMOKE
 
-
-def test_no_cartesian_products(suite_run_report):
-    # Plans come from the shared one-pass suite report (round 11):
-    # rebuilding all 342 plans here cost 215 s of pytest wall on top
-    # of the identical pass test_every_query_runs already paid.
+def test_no_cartesian_products(query_run):
+    # Plans come from the per-query memo (conftest.query_run) that the
+    # oracle tests and the every-query-runs lint share.
     offenders = []
     broken = []
-    for name, rec in suite_run_report.items():
+    for name in suite.QUERIES:
+        rec = query_run(name)
         if name.startswith("st_"):
             continue  # streaming queries execute on construction
         if rec["error"] is not None:

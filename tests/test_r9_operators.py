@@ -235,6 +235,19 @@ def test_time_travel_rekeys_on_content_change(spark, tmp_path):
     assert suite_r9._time_travel_table(spark, str(alt)).path != same.path
 
 
+def test_time_travel_build_keeps_vacuumed_history(spark):
+    """Rebuilding the time-travel history (a signature miss) must leave
+    the same corpus' vacuumed history in place: each layout family
+    purges only its own superseded signatures."""
+    import shutil
+
+    vac = suite_r9._vacuumed_table(spark, SF)
+    shutil.rmtree(suite_r9._time_travel_table(spark, SF).path)  # force a miss
+    assert suite_r9._time_travel_table(spark, SF).current_version() == 3
+    assert os.path.isdir(vac.path)
+    assert [m["version"] for m in vac.history()] == [1, 3]
+
+
 # ---------------------------------------------------------------------------
 # st_tws_running_totals gating
 # ---------------------------------------------------------------------------

@@ -7,26 +7,27 @@ import pytest
 
 from covid_19_fl_spark import suite
 
-from .oracle import compare
-
 ORACLE_CASES = sorted(suite.ORACLES)
 
 
 @pytest.mark.parametrize("name", ORACLE_CASES)
-def test_query_matches_oracle(spark, sf_dir, name):
-    df = suite.QUERIES[name](spark, sf_dir)
-    compare(df, suite.ORACLES[name], sf_dir)
+def test_query_matches_oracle(query_run, name):
+    rec = query_run(name)
+    assert rec["error"] is None, rec["error"]
+    assert rec["mismatch"] is None, rec["mismatch"]
 
 
-def test_every_query_runs(suite_run_report):
-    # One shared pass (conftest.suite_run_report) serves this lint and
-    # the cartesian-product lint (round 11 pytest-wall fix).
-    failed = {
-        n: r["error"] for n, r in suite_run_report.items() if r["error"]
-    }
+def test_every_query_runs(query_run):
+    # One memoized run per query (conftest.query_run) serves this lint,
+    # the oracle tests and the cartesian-product lint.
+    report = {n: query_run(n) for n in suite.QUERIES}
+    failed = {n: r["error"] for n, r in report.items() if r["error"]}
     assert not failed, f"queries failed to run: {failed}"
-    for name, rec in suite_run_report.items():
-        assert rec["count"] >= 0, name
+    for name, rec in report.items():
+        # an oracle mismatch stops the compare before it counts rows;
+        # test_query_matches_oracle reports that query
+        if rec["mismatch"] is None:
+            assert rec["count"] >= 0, name
 
 
 def test_no_oracle_emits_hugeint(sf_dir):

@@ -1,5 +1,5 @@
 """Generate INVENTORY.md — the machine-derived index of every
-registered suite query: implementation location, oracle status, driver
+registered suite query: implementation module, oracle status, driver
 SHOWCASE position, and the first docstring line.
 
 The operator tables in SURVEY.md §2 and README.md are prose; this file
@@ -54,16 +54,17 @@ def family(name: str) -> str:
     return "".join(ch for ch in head if not ch.isdigit())
 
 
-def main() -> None:
+def render() -> str:
+    """The text of INVENTORY.md for the registry as imported."""
     import __spark_entry__ as entry
 
     showcase_pos = {n: i + 1 for i, n in enumerate(entry.SHOWCASE)}
     rows = []
     for name, fn in suite.QUERIES.items():
         # the registry stores the conf-pinning wrapper (suite.query);
-        # report the real implementation's location via __wrapped__
-        code = inspect.unwrap(fn).__code__
-        loc = f"{os.path.relpath(code.co_filename, REPO)}:{code.co_firstlineno}"
+        # report the real implementation's module via __wrapped__. No
+        # line number: it goes stale whenever code above it moves.
+        loc = os.path.relpath(inspect.unwrap(fn).__code__.co_filename, REPO)
         doc = (fn.__doc__ or "").strip().splitlines()
         first = doc[0].rstrip() if doc else ""
         rows.append(
@@ -139,9 +140,13 @@ def main() -> None:
     for name, fam, loc, orc, pos, first in rows:
         first = first.replace("|", "\\|")
         out.append(f"| {name} | {fam} | `{loc}` | {orc} | {pos} | {first} |")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
     with open(os.path.join(REPO, "INVENTORY.md"), "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(f"INVENTORY.md written ({len(rows)} queries, {oracled} oracled)")
+        f.write(render())
+    print(f"INVENTORY.md written ({len(suite.QUERIES)} queries)")
 
 
 if __name__ == "__main__":
