@@ -3,10 +3,23 @@
 One place to encode the engine's execution posture (SURVEY.md §4.3):
 AQE on (runtime shuffle coalescing + skew-join handling), UTC session
 timezone (the reference used local wall-clock — cv-api.py:115 — which we
-canonicalize to UTC), Arrow for any pandas interchange, and a shuffle
-partition count sized for the local test harness (AQE coalesces down, so
-this is an upper bound, not a fixed fan-out; on a real cluster you'd
-raise it and let AQE coalesce).
+canonicalize to UTC), and Arrow for any pandas interchange.
+
+Shuffle width is two settings, because two kinds of plan read it:
+
+- Batch plans run under AQE, which starts every shuffle at
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` (32,
+  sized for the local test harness) and coalesces small partitions
+  down at run time — an upper bound, not a fixed fan-out.
+- Plans AQE never sees — streaming state stores and the micro-batch
+  plans a ``foreachBatch`` sink runs — use ``spark.sql.shuffle.partitions``
+  as their FIXED width. Each partition there costs a state store
+  instance and its commit files per micro-batch, and a file per
+  batch write, whatever its row count, so it is the session's core
+  count: one store per task slot, all in one wave.
+
+On a real cluster one ``spark.sql.shuffle.partitions`` sized from the
+input serves both (``cluster_conf``).
 """
 
 from __future__ import annotations
@@ -20,13 +33,21 @@ def get_spark(app_name: str = "covid_19_fl_spark", cpus: str | None = None) -> S
     """Build (or reuse) the engine SparkSession.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores.
+    AQE reads ``coalescePartitions.initialPartitionNum`` (32) as the
+    batch shuffle bound; ``spark.sql.shuffle.partitions``, the width of
+    the non-adaptive streaming and micro-batch plans, is the core count
+    (module docstring).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    # task slots of local[cpus]: for "*", the cores this process may run on
+    cores = cpus if cpus.isdigit() else str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # Upper bound on shuffle fan-out; AQE coalesces small partitions.
-        .config("spark.sql.shuffle.partitions", "32")
+        # Upper bound on batch shuffle fan-out; AQE coalesces small partitions.
+        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
+        # Fixed width of plans AQE does not run: one state store per core.
+        .config("spark.sql.shuffle.partitions", cores)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -22,10 +22,17 @@ import tempfile
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .. import incremental
+from .. import incremental, tables
+
+# Row count of each table (by absolute path) as of its last write in
+# this process, with the table's ``tables.content_sig`` right after
+# that write. Trusted only while the signature still matches, so a
+# foreign writer, a failed write that left files behind, or a
+# regenerated table falls back to counting.
+_written_rows: dict[str, tuple[str, int]] = {}
 
 
 class ParquetTable:
@@ -51,25 +58,36 @@ class ParquetTable:
         )
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The stored table, read with ``tables.read_schema``'s cached
+        schema: no footer-inference job after a write by this class."""
+        return self.spark.read.schema(tables.read_schema(self.spark, self.path)).parquet(
+            self.path
+        )
 
     # -- K1: append ---------------------------------------------------------
     def append(self, df: DataFrame) -> None:
-        w = df.write.mode("append")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(self.path)
+        existed = self.exists()
+        stored = tables.cached_schema(self.spark, self.path) if existed else None
+        old_n = self._recorded_rows() if existed else 0
+        n = self._write(df, self.path, "append")
+        if not self.partition_by and (
+            not existed or stored == tables.as_read(df.schema)
+        ):
+            tables.remember_schema(self.spark, self.path, df.schema)
+        if old_n is not None:
+            self._record_rows(old_n + n)
 
     # -- K2: full refresh ----------------------------------------------------
     def overwrite(self, df: DataFrame) -> int:
         """Truncate-and-reload with the K5 count-delta metric
         (cv-api.py:184-207). Returns new_records = len(df) - len(old).
-        The input lineage executes ONCE (the write); both counts are
-        parquet footer reads, so an expensive upstream plan is not run
-        a second time just for the metric."""
-        old_n = self.read().count() if self.exists() else 0
+        The input lineage executes ONCE (the write): the new count is
+        observed on the write itself, and the old one is the count this
+        process recorded at the table's last write, or a count job when
+        the table changed since (or was written elsewhere)."""
+        old_n = self._rows() if self.exists() else 0
         self._swap(df)
-        return self.read().count() - old_n
+        return self._rows() - old_n
 
     # -- K3: selective delete -------------------------------------------------
     def delete_where(self, condition: str) -> None:
@@ -157,22 +175,46 @@ class ParquetTable:
         repartition (round-robin, no key) — size-balanced output files
         regardless of data skew. Returns the output file count."""
         df = self.read()
-        n = df.count()
+        n = self._rows()
         n_files = max(1, -(-n // rows_per_file))
         self._swap(df.repartition(n_files))
         return n_files
 
     # -- internals ---------------------------------------------------------------
+    def _write(self, df: DataFrame, path: str, mode: str) -> int:
+        """Write ``df`` to ``path``; returns the rows written, observed
+        on the write itself (no extra job)."""
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+        if self.partition_by:
+            w = w.partitionBy(*self.partition_by)
+        w.parquet(path)
+        return obs.get["rows"]
+
+    def _recorded_rows(self) -> int | None:
+        rec = _written_rows.get(os.path.abspath(self.path))
+        if rec is not None and rec[0] == tables.content_sig(self.path):
+            return rec[1]
+        return None
+
+    def _record_rows(self, n: int) -> None:
+        _written_rows[os.path.abspath(self.path)] = (tables.content_sig(self.path), n)
+
+    def _rows(self) -> int:
+        """Row count of the stored table: the recorded count when the
+        table is unchanged since this process wrote it, else a count job."""
+        n = self._recorded_rows()
+        return self.read().count() if n is None else n
+
     def _swap(self, df: DataFrame) -> None:
+        """Replace the table with ``df``, recording its schema and row
+        count for the next ``read`` and ``_rows``."""
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         os.makedirs(parent, exist_ok=True)
         staging = os.path.join(
             tempfile.mkdtemp(dir=parent), f".staging-{uuid.uuid4().hex[:8]}"
         )
-        w = df.write.mode("overwrite")
-        if self.partition_by:
-            w = w.partitionBy(*self.partition_by)
-        w.parquet(staging)
+        n = self._write(df, staging, "overwrite")
         old = self.path + f".old-{uuid.uuid4().hex[:8]}"
         if os.path.exists(self.path):
             os.rename(self.path, old)
@@ -189,6 +231,9 @@ class ParquetTable:
             raise
         shutil.rmtree(old, ignore_errors=True)
         shutil.rmtree(os.path.dirname(staging), ignore_errors=True)
+        if not self.partition_by:
+            tables.remember_schema(self.spark, self.path, df.schema)
+        self._record_rows(n)
 
     def recover_orphaned(self) -> bool:
         """Repair a table lost to a crash between _swap's two renames:

@@ -54,7 +54,7 @@ def bucketed_table(
     advice): a caller bucketing the same table by a different key, or
     a regenerated corpus at the same path, gets its own layout instead
     of silently reusing the wrong one."""
-    sig = tables.content_sig(sf_dir, table)
+    sig = tables.content_sig(tables._path(sf_dir, table))
     name = f"bkt_{table}_{key}_{n}_{tables.corpus_tag(sf_dir)}_{sig}"
 
     def build(dest: str) -> None:

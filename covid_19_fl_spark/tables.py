@@ -9,20 +9,24 @@ with ``.explain`` — ``PushedFilters`` / ``ReadSchema``).
 
 Both readers pass an explicit read schema: each table's physical
 schema is inferred from its parquet footers once per process and
-cached, keyed on the table's ``content_sig`` and the session confs
-that shape the inference (``_read_schema``). Footer inference runs a
-Spark job (~80 ms); with an explicit schema a load runs none.
+cached, keyed on the table's path, its ``content_sig`` and the session
+confs that shape the inference (``read_schema``). Footer inference
+runs a Spark job (~80 ms); with an explicit schema a load runs none.
+The same cache serves the engine's own stored tables
+(``sinks.batch.ParquetTable``), whose writes seed it
+(``remember_schema``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 from .confs import ensure_session_defaults
 
 TABLE_NAMES = (
@@ -104,8 +108,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # registered query pins at entry — asserting it here too keeps
     # direct library callers (tests, pipelines) order-independent.
     ensure_session_defaults(spark)
-    schema = _read_schema(spark, sf_dir, name)
-    return _normalize(name, spark.read.schema(schema).parquet(path))
+    return _normalize(name, spark.read.schema(read_schema(spark, path)).parquet(path))
 
 
 def stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -114,14 +117,14 @@ def stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     with the same schema and normalization as ``load``.
 
     The stream's schema is the table's physical schema read under the
-    pinned session defaults, cached by ``_read_schema`` like ``load``'s.
+    pinned session defaults, cached by ``read_schema`` like ``load``'s.
     ``maxFilesPerTrigger`` is pinned above any corpus's file count, so
     an availableNow drain takes the whole table in ONE micro-batch:
     order-sensitive folds (st_cusum_drift) and the single-batch
     exactness assertions depend on it."""
     ensure_session_defaults(spark)
     src = (
-        spark.readStream.schema(_read_schema(spark, sf_dir, name))
+        spark.readStream.schema(read_schema(spark, _path(sf_dir, name)))
         .option("maxFilesPerTrigger", 1_000_000)
         .parquet(_stage_stream_dir(sf_dir, name))
     )
@@ -136,26 +139,62 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )
-_read_schemas: dict[tuple, StructType] = {}
+# (absolute path, _SCHEMA_CONFS values) -> (content_sig, schema): one
+# entry per table and conf state, replaced when the table changes.
+_read_schemas: dict[tuple, tuple[str, StructType]] = {}
 
 
-def _read_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
-    """The schema Spark infers for one corpus table, inferred once per
-    (table, ``content_sig``, ``_SCHEMA_CONFS`` values) and cached.
+def _schema_slot(spark: SparkSession, path: str) -> tuple:
+    return (os.path.abspath(path), tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
 
-    Metadata only, never rows. A regenerated corpus at the same path
+
+def read_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet table at ``path`` (one
+    file or a directory of part files), inferred once per (path,
+    ``content_sig``, ``_SCHEMA_CONFS`` values) and cached.
+
+    Metadata only, never rows. A table rewritten at the same path
     changes ``content_sig``, so its stale schema is never served."""
-    path = _path(sf_dir, name)
-    key = (
-        sf_dir,
-        name,
-        content_sig(sf_dir, name),
-        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
-    )
-    schema = _read_schemas.get(key)
+    schema = cached_schema(spark, path)
     if schema is None:
-        schema = _read_schemas[key] = spark.read.parquet(path).schema
+        sig = content_sig(path)
+        schema = spark.read.parquet(path).schema
+        _read_schemas[_schema_slot(spark, path)] = (sig, schema)
     return schema
+
+
+def cached_schema(spark: SparkSession, path: str) -> StructType | None:
+    """``read_schema``'s cached schema for ``path`` as it is now, or
+    None; never infers."""
+    hit = _read_schemas.get(_schema_slot(spark, path))
+    return hit[1] if hit is not None and hit[0] == content_sig(path) else None
+
+
+def remember_schema(spark: SparkSession, path: str, written: StructType) -> None:
+    """Seed ``read_schema``'s cache for ``path`` as it is now with the
+    schema a Spark writer just wrote there, so the next read runs no
+    inference job. A Spark-written footer carries the writer's schema,
+    and inference returns it with every field, array element and map
+    value made nullable (``as_read``).
+
+    Only for a write whose files all carry ``written``: a
+    non-partitioned overwrite, or an append of the schema the table
+    already had."""
+    _read_schemas[_schema_slot(spark, path)] = (content_sig(path), as_read(written))
+
+
+def as_read(written: DataType) -> DataType:
+    """The type a parquet read infers for a column Spark wrote as
+    ``written``: the same type, nullable all the way down."""
+    if isinstance(written, StructType):
+        return StructType(
+            [StructField(f.name, as_read(f.dataType), True, f.metadata) for f in written.fields]
+        )
+    if isinstance(written, ArrayType):
+        return ArrayType(as_read(written.elementType), True)
+    if isinstance(written, MapType):
+        return MapType(as_read(written.keyType), as_read(written.valueType), True)
+    return written
 
 
 def _stage_stream_dir(sf_dir: str, table: str) -> str:
@@ -221,17 +260,15 @@ def _normalize(name: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def content_sig(sf_dir: str, name: str) -> str:
-    """Cheap content signature of one corpus table: md5 over the sorted
-    (relative path, size, mtime_ns) of every data file under
-    ``sf_dir/name.parquet`` — no Spark job, just filesystem stats.
+def content_sig(path: str) -> str:
+    """Cheap content signature of one parquet table (a file or a
+    directory of part files): md5 over the sorted (relative path, size,
+    mtime_ns) of every data file under ``path`` — no Spark job, just
+    filesystem stats. A missing path has the signature of an empty one.
 
-    Keys the in-process read-schema cache (``_read_schema``), so a
-    corpus regenerated at the same path is re-inferred. Also keys the
-    /tmp layouts derived from the table (``derived_layout``)."""
-    import hashlib
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    Keys the in-process read-schema cache (``read_schema``), so a
+    table regenerated at the same path is re-inferred. Also keys the
+    /tmp layouts derived from a corpus table (``derived_layout``)."""
     entries: list[tuple[str, int, int]] = []
     if os.path.isdir(path):
         for root, _dirs, files in os.walk(path):
@@ -241,7 +278,7 @@ def content_sig(sf_dir: str, name: str) -> str:
                 st = os.stat(os.path.join(root, f))
                 rel = os.path.relpath(os.path.join(root, f), path)
                 entries.append((rel, st.st_size, st.st_mtime_ns))
-    else:
+    elif os.path.exists(path):
         st = os.stat(path)
         entries.append((os.path.basename(path), st.st_size, st.st_mtime_ns))
     h = hashlib.md5(repr(sorted(entries)).encode()).hexdigest()
@@ -254,10 +291,13 @@ LAYOUT_ROOT = "/tmp/spark_graft_layouts"
 
 
 def corpus_tag(sf_dir: str) -> str:
-    """Filesystem-safe name of a corpus directory (its basename), for
-    the /tmp paths derived from it."""
-    base = os.path.basename(os.path.normpath(sf_dir))
-    return re.sub(r"[^0-9A-Za-z]+", "_", base) or "sf"
+    """Filesystem-safe name of a corpus directory, for the /tmp paths
+    derived from it: its basename plus a short hash of its normalized
+    absolute path, so two corpora that share a basename (``a/sf0.01``,
+    ``b/sf0.01``) never share, or purge, each other's layouts."""
+    full = os.path.normpath(os.path.abspath(sf_dir))
+    base = re.sub(r"[^0-9A-Za-z]+", "_", os.path.basename(full)) or "sf"
+    return f"{base}_{hashlib.md5(full.encode()).hexdigest()[:8]}"
 
 
 def derived_layout(
@@ -282,7 +322,7 @@ def derived_layout(
     family's layout is touched."""
     import shutil
 
-    sig = content_sig(sf_dir, table)
+    sig = content_sig(_path(sf_dir, table))
     home = os.path.join(LAYOUT_ROOT, corpus_tag(sf_dir), family)
     dest = os.path.join(home, sig)
     marker = os.path.join(dest, "_READY")

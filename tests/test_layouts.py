@@ -5,6 +5,7 @@ histories). Pure Python: the builds here write plain files, no Spark."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -36,7 +37,7 @@ def test_layout_builds_once_per_signature(corpus):
     assert tables.derived_layout(corpus, "orders", "history", _make_build(calls)) == dest
     assert calls == [dest]
     with open(os.path.join(dest, "_READY")) as fh:
-        assert fh.read() == tables.content_sig(corpus, "orders")
+        assert fh.read() == tables.content_sig(os.path.join(corpus, "orders.parquet"))
 
 
 def test_layout_rebuild_purges_only_its_own_family(corpus):
@@ -67,5 +68,22 @@ def test_layout_readiness_check_replaces_the_marker(corpus):
 
 
 def test_corpus_tag_is_filesystem_safe():
-    assert tables.corpus_tag("/data/corpora/sf0.01/") == "sf0_01"
-    assert tables.corpus_tag("/") == "sf"
+    assert re.fullmatch(r"sf0_01_[0-9a-f]{8}", tables.corpus_tag("/data/corpora/sf0.01/"))
+    assert re.fullmatch(r"sf_[0-9a-f]{8}", tables.corpus_tag("/"))
+    assert tables.corpus_tag("/data/corpora/sf0.01/") == tables.corpus_tag("/data/corpora/sf0.01")
+
+
+def test_same_basename_corpora_keep_both_layouts(corpus, tmp_path):
+    """``a/sf0.001`` and ``b/sf0.001`` are different corpora: building a
+    layout for one must not purge the other's."""
+    other = tmp_path / "b" / "sf0.001"
+    other.mkdir(parents=True)
+    (other / "orders.parquet").write_bytes(b"v2")
+    calls = []
+    mine = tables.derived_layout(corpus, "orders", "history", _make_build(calls))
+    theirs = tables.derived_layout(str(other), "orders", "history", _make_build(calls))
+    assert mine != theirs
+    assert os.path.isfile(os.path.join(mine, "_READY"))
+    assert os.path.isfile(os.path.join(theirs, "_READY"))
+    assert tables.derived_layout(corpus, "orders", "history", _make_build(calls)) == mine
+    assert calls == [mine, theirs]

@@ -10,9 +10,12 @@ quantized centroids, sketch, window series, fold-based EWMA).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from covid_19_fl_spark import suite
+from covid_19_fl_spark.confs import scoped_conf
 
 from .conftest import SF_SMOKE
 
@@ -44,14 +47,36 @@ REPRESENTATIVES = [
 ]
 
 
+# Exchanges sized by the session's shuffle width (EnsureRequirements);
+# the last ``, N)`` on the line is the partition count.
+_EXCHANGE_WIDTH = re.compile(r"Exchange \w+partitioning\(.*, (\d+)\), ENSURE_REQUIREMENTS")
+
+
+def _run(spark, name: str, width: int) -> tuple[list, list[int]]:
+    """Rows and exchange widths of one representative at one shuffle
+    width. Batch plans run under AQE, which starts shuffles at
+    ``initialPartitionNum``; streaming plans use ``shuffle.partitions``,
+    so both flip."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(width),
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(width),
+    }
+    with scoped_conf(spark, confs):
+        df = suite.QUERIES[name](spark, SF_SMOKE)
+        rows = sorted(map(tuple, df.collect()))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    return rows, sorted(map(int, _EXCHANGE_WIDTH.findall(plan)))
+
+
+# Representatives whose executed plan has no shuffle at all.
+NO_EXCHANGE = {"mm_binary_media_scan"}
+
+
 @pytest.mark.parametrize("name", REPRESENTATIVES)
 def test_result_is_partitioning_invariant(spark, name):
-    default = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        a = sorted(map(tuple, suite.QUERIES[name](spark, SF_SMOKE).collect()))
-        spark.conf.set("spark.sql.shuffle.partitions", "5")
-        b = sorted(map(tuple, suite.QUERIES[name](spark, SF_SMOKE).collect()))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", default)
+    a, widths_a = _run(spark, name, 32)
+    b, widths_b = _run(spark, name, 5)
     assert a == b, f"{name} output depends on shuffle partitioning"
+    if name not in NO_EXCHANGE:
+        # the flip reached the plan, else a and b share one plan
+        assert widths_a and widths_a != widths_b, (widths_a, widths_b)

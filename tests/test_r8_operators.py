@@ -45,7 +45,7 @@ def test_png_corpus_materialization_is_idempotent(spark):
     assert os.path.getmtime(marker) == before
     # the marker carries the source-table content signature (round-8
     # advice: regenerated corpus ⇒ new signature ⇒ fresh fixtures)
-    assert open(marker).read().strip() == tables.content_sig(SF, "documents")
+    assert open(marker).read().strip() == tables.content_sig(tables._path(SF, "documents"))
     pngs = [f for f in os.listdir(dest) if f.endswith(".png")]
     assert len(pngs) == suite._t(spark, SF, "documents").count()
 
@@ -58,11 +58,20 @@ def test_png_corpus_rekeys_on_content_change(spark, tmp_path):
 
     alt = tmp_path / "sf0.001"
     shutil.copytree(SF, alt)  # copy2 preserves mtimes → same signature
-    dest_orig = suite_r8._png_corpus_dir(spark, SF)
-    assert suite_r8._png_corpus_dir(spark, str(alt)) == dest_orig
-    # "regenerate" the documents table in place: same bytes, new mtime
-    os.utime(alt / "documents.parquet")
-    assert suite_r8._png_corpus_dir(spark, str(alt)) != dest_orig
+    try:
+        dest_orig = suite_r8._png_corpus_dir(spark, SF)
+        # a same-named copy elsewhere: same signature, its own layout
+        dest_alt = suite_r8._png_corpus_dir(spark, str(alt))
+        assert dest_alt != dest_orig
+        assert os.path.basename(dest_alt) == os.path.basename(dest_orig)
+        # "regenerate" the documents table in place: same bytes, new mtime
+        os.utime(alt / "documents.parquet")
+        assert suite_r8._png_corpus_dir(spark, str(alt)) != dest_alt
+        assert os.path.isfile(os.path.join(dest_orig, "_READY"))
+    finally:
+        shutil.rmtree(
+            os.path.join(tables.LAYOUT_ROOT, tables.corpus_tag(str(alt))), ignore_errors=True
+        )
 
 
 def test_resize_pipeline_scale_facts(spark):

@@ -229,10 +229,19 @@ def test_time_travel_rekeys_on_content_change(spark, tmp_path):
 
     alt = tmp_path / "sf0.001"
     shutil.copytree(SF, alt)
-    same = suite_r9._time_travel_table(spark, str(alt))
-    assert same.path == suite_r9._time_travel_table(spark, SF).path
-    os.utime(alt / "orders.parquet")  # "regenerated" corpus
-    assert suite_r9._time_travel_table(spark, str(alt)).path != same.path
+    try:
+        orig = suite_r9._time_travel_table(spark, SF).path
+        # a same-named copy elsewhere: same signature, its own layout
+        same = suite_r9._time_travel_table(spark, str(alt))
+        assert same.path != orig
+        assert os.path.basename(same.path) == os.path.basename(orig)
+        os.utime(alt / "orders.parquet")  # "regenerated" corpus
+        assert suite_r9._time_travel_table(spark, str(alt)).path != same.path
+        assert os.path.isfile(os.path.join(orig, "_READY"))
+    finally:
+        shutil.rmtree(
+            os.path.join(tables.LAYOUT_ROOT, tables.corpus_tag(str(alt))), ignore_errors=True
+        )
 
 
 def test_time_travel_build_keeps_vacuumed_history(spark):

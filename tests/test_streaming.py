@@ -5,6 +5,8 @@ multiple micro-batches so cross-batch semantics are actually exercised."""
 from __future__ import annotations
 
 import json
+import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,6 +58,33 @@ def test_append_new_across_microbatches(spark, tmp_path, input_dir):
     q.awaitTermination(120)
     got = sorted(r.case_number for r in table.read().collect())
     assert got == [1, 2, 3, 4]  # duplicate case 2 appended exactly once
+
+
+def test_append_new_stream_has_one_state_store_per_core(spark, tmp_path, input_dir):
+    """The dedup state of a ``write_append_new`` stream has one
+    partition per task slot, and each micro-batch writes at most that
+    many files."""
+    cores = spark.sparkContext.defaultParallelism
+    table = ParquetTable(spark, str(tmp_path / "tbl"))
+    ckpt = tmp_path / "ckpt_width"
+    dedup = pipeline.dedup_incremental(
+        _stream(spark, input_dir), ["case_number"], "date_added"
+    )
+    q = pipeline.write_append_new(
+        dedup, table, "case_number", str(ckpt)
+    ).trigger(availableNow=True).start()
+    q.awaitTermination(120)
+    assert {
+        p["stateOperators"][0]["numShufflePartitions"] for p in q.recentProgress
+    } == {cores}
+    assert sorted(os.listdir(ckpt / "state" / "0")) == sorted(
+        [str(i) for i in range(cores)] + ["_metadata"]
+    )
+    writes = Counter(  # part-<n>-<write uuid>-c000...
+        "-".join(f.split("-")[2:7]) for f in os.listdir(table.path) if f.startswith("part-")
+    )
+    assert len(writes) == 2 and max(writes.values()) <= cores  # two data batches
+    assert sorted(r.case_number for r in table.read().collect()) == [1, 2, 3, 4]
 
 
 def test_dedup_incremental_stateful(spark, tmp_path, input_dir):

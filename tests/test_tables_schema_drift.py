@@ -139,17 +139,17 @@ def test_regenerated_corpus_is_reinferred(spark, tmp_path):
     long schema."""
 
     def ts_type(sf_dir):
-        schema = tables._read_schema(spark, sf_dir, "events")
+        schema = tables.read_schema(spark, tables._path(sf_dir, "events"))
         return schema["ts"].dataType.simpleString()
 
     sf_dir = _write_events(str(tmp_path / "a"), "ns")
-    ns_sig = tables.content_sig(sf_dir, "events")
+    ns_sig = tables.content_sig(tables._path(sf_dir, "events"))
     tables.load(spark, sf_dir, "events").collect()
     assert ts_type(sf_dir) == "bigint"
 
     us_dir = _write_events(str(tmp_path / "b"), "us")
     os.replace(tables._path(us_dir, "events"), tables._path(sf_dir, "events"))
-    assert tables.content_sig(sf_dir, "events") != ns_sig
+    assert tables.content_sig(tables._path(sf_dir, "events")) != ns_sig
     assert ts_type(sf_dir) == "timestamp_ntz"
     df = tables.load(spark, sf_dir, "events")
     assert df.schema["ts"].dataType.simpleString() == "timestamp"
@@ -165,12 +165,12 @@ def test_schema_conf_flip_is_not_served_stale(spark, tmp_path):
     is what an uncached read gives under that conf."""
     sf_dir = _write_events(str(tmp_path), "us")
     path = tables._path(sf_dir, "events")
-    default = tables._read_schema(spark, sf_dir, "events")
+    default = tables.read_schema(spark, tables._path(sf_dir, "events"))
     key = "spark.sql.parquet.inferTimestampNTZ.enabled"
     flipped = "false" if spark.conf.get(key) == "true" else "true"
     with scoped_conf(spark, {key: flipped}):
-        got = tables._read_schema(spark, sf_dir, "events")
+        got = tables.read_schema(spark, tables._path(sf_dir, "events"))
         assert got == spark.read.parquet(path).schema
         assert tables.load(spark, sf_dir, "events").count() == len(_ROWS)
     assert got != default
-    assert tables._read_schema(spark, sf_dir, "events") == default
+    assert tables.read_schema(spark, tables._path(sf_dir, "events")) == default
