@@ -15,8 +15,9 @@ Shuffle width is two settings, because two kinds of plan read it:
   plans a ``foreachBatch`` sink runs — use ``spark.sql.shuffle.partitions``
   as their FIXED width. Each partition there costs a state store
   instance and its commit files per micro-batch, and a file per
-  batch write, whatever its row count, so it is the session's core
-  count: one store per task slot, all in one wave.
+  batch write, whatever its row count, so it is the session's task
+  slot count (``defaultParallelism``): one store per slot, all in one
+  wave.
 
 On a real cluster one ``spark.sql.shuffle.partitions`` sized from the
 input serves both (``cluster_conf``).
@@ -35,19 +36,15 @@ def get_spark(app_name: str = "covid_19_fl_spark", cpus: str | None = None) -> S
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores.
     AQE reads ``coalescePartitions.initialPartitionNum`` (32) as the
     batch shuffle bound; ``spark.sql.shuffle.partitions``, the width of
-    the non-adaptive streaming and micro-batch plans, is the core count
-    (module docstring).
+    the non-adaptive streaming and micro-batch plans, is the session's
+    task slot count (module docstring).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    # task slots of local[cpus]: for "*", the cores this process may run on
-    cores = cpus if cpus.isdigit() else str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # Upper bound on batch shuffle fan-out; AQE coalesces small partitions.
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "32")
-        # Fixed width of plans AQE does not run: one state store per core.
-        .config("spark.sql.shuffle.partitions", cores)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -75,6 +72,11 @@ def get_spark(app_name: str = "covid_19_fl_spark", cpus: str | None = None) -> S
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     )
     spark = builder.getOrCreate()
+    # Fixed width of plans AQE does not run: one state store per task
+    # slot. defaultParallelism is local[cpus]'s slot count as the JVM
+    # resolves it (for "*", the processors it may use under any quota).
+    slots = str(spark.sparkContext.defaultParallelism)
+    spark = SparkSession.builder.config("spark.sql.shuffle.partitions", slots).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -87,6 +87,7 @@ class ParquetTable:
         the table changed since (or was written elsewhere)."""
         old_n = self._rows() if self.exists() else 0
         self._swap(df)
+        # the new count comes back through the record (see _swap)
         return self._rows() - old_n
 
     # -- K3: selective delete -------------------------------------------------
@@ -208,7 +209,8 @@ class ParquetTable:
 
     def _swap(self, df: DataFrame) -> None:
         """Replace the table with ``df``, recording its schema and row
-        count for the next ``read`` and ``_rows``."""
+        count for the next ``read`` and ``_rows`` (not a return value:
+        the benchmark's tracer wraps this method and drops its result)."""
         parent = os.path.dirname(os.path.abspath(self.path)) or "."
         os.makedirs(parent, exist_ok=True)
         staging = os.path.join(

@@ -85,6 +85,8 @@ def test_modularity_deterministic_in_polluted_session(spark):
     pollution = {
         "spark.sql.session.timeZone": "Australia/Eucla",
         "spark.sql.shuffle.partitions": "7",
+        # AQE starts batch shuffles here, not at shuffle.partitions
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "7",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.ansi.enabled": "true",
     }
